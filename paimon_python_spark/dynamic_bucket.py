@@ -58,7 +58,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from typing import List, Optional
 
 __all__ = [
@@ -67,7 +66,6 @@ __all__ = [
     "DynamicBucketAssigner",
     "read_hash_index_file",
     "write_hash_index_file",
-    "write_merged_index_manifest",
 ]
 
 #: batches with at most this many distinct keys prune the cross-
@@ -539,83 +537,32 @@ def _logical_value(v, dt):
     return v
 
 
-def pending_to_entries(info, pending: list):
-    """Staged assigner metas → spec ``IndexManifestEntry`` dicts. The
-    LAST meta wins per (partition, bucket) — a lookup-changelog write
-    and the data write of one commit may both touch a bucket. Returns
-    (entries, replaced) where ``replaced`` is the set of
-    (partition_bytes, bucket) groups the entries supersede."""
+def pending_to_entries(info, pending: list) -> list:
+    """Staged assigner metas → spec ``IndexManifestEntry`` dicts, one
+    per (partition, bucket). The LAST meta wins per (partition, bucket)
+    — a lookup-changelog write and the data write of one commit may
+    both touch a bucket. Each entry supersedes its bucket's HASH entry
+    at commit (``paimon_lake._commit_lake_snapshot``)."""
     from paimon_python_spark.paimon_import import HASH_INDEX, encode_binary_row
 
     part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
     latest: dict = {}
     for m in pending:
         latest[(m["part_json"], int(m["bucket"]))] = m
-    entries, replaced = [], set()
-    for (pj, bucket), m in sorted(latest.items()):
-        part_bytes = encode_binary_row(m["part_values"], part_types)
-        replaced.add((part_bytes, bucket))
-        entries.append(
-            {
-                "_VERSION": 1,
-                "_KIND": 0,
-                "_PARTITION": part_bytes,
-                "_BUCKET": bucket,
-                "_INDEX_TYPE": HASH_INDEX,
-                "_FILE_NAME": m["file"],
-                "_FILE_SIZE": int(m["size"]),
-                "_ROW_COUNT": int(m["rows"]),
-                "_DELETIONS_VECTORS_RANGES": None,
-            }
-        )
-    return entries, replaced
-
-
-def write_index_manifest(table_path: str, entries: list) -> str:
-    """Write ``entries`` as one avro index manifest under
-    ``manifest/``; returns the file name."""
-    from paimon_python_spark.avro_codec import write_avro_records
-    from paimon_python_spark.paimon_import import INDEX_MANIFEST_SCHEMA
-
-    name = f"index-manifest-{uuid.uuid4().hex[:12]}.avro"
-    write_avro_records(
-        os.path.join(table_path, "manifest", name),
-        INDEX_MANIFEST_SCHEMA,
-        entries,
-    )
-    return name
-
-
-def write_merged_index_manifest(table_path: str, info, pending: list) -> Optional[str]:
-    """Write the commit's FULL index manifest: every index entry live
-    in the previous snapshot (deletion vectors included) carried
-    forward verbatim, minus the HASH entries of buckets ``pending``
-    replaces, plus the new HASH entries. Returns the manifest file
-    name, or None when there is nothing to change (caller inherits the
-    previous manifest)."""
-    if not pending:
-        return None
-
-    from paimon_python_spark.paimon_import import HASH_INDEX, live_index_entries
-
-    new_entries, replaced = pending_to_entries(info, pending)
-    try:
-        prev = live_index_entries(table_path)
-    except FileNotFoundError:
-        prev = []
-    carried = [
-        r
-        for r in prev
-        if not (
-            r.get("_INDEX_TYPE") == HASH_INDEX
-            and (
-                bytes(r.get("_PARTITION") or b""),
-                int(r.get("_BUCKET") or 0),
-            )
-            in replaced
-        )
+    return [
+        {
+            "_VERSION": 1,
+            "_KIND": 0,
+            "_PARTITION": encode_binary_row(m["part_values"], part_types),
+            "_BUCKET": bucket,
+            "_INDEX_TYPE": HASH_INDEX,
+            "_FILE_NAME": m["file"],
+            "_FILE_SIZE": int(m["size"]),
+            "_ROW_COUNT": int(m["rows"]),
+            "_DELETIONS_VECTORS_RANGES": None,
+        }
+        for (_pj, bucket), m in sorted(latest.items())
     ]
-    return write_index_manifest(table_path, carried + new_entries)
 
 
 def arrival_dedup(sdf, keys: List[str], kind_col: Optional[str] = None):

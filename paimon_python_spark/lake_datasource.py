@@ -980,13 +980,16 @@ class PaimonLakeBatchWriter(DataSourceWriter):
 
     def __init__(self, table_path: str, overwrite: bool):
         from paimon_python_spark.paimon_import import plan_paimon_files
-        from paimon_python_spark.paimon_lake import read_paimon_schema
+        from paimon_python_spark.paimon_lake import _lake_head, read_paimon_schema
 
         self.table_path = table_path
         self.info = read_paimon_schema(table_path)
         self.overwrite = overwrite
         info = self.info
         self.is_pk = bool(info.primary_keys)
+        #: the snapshot every plan-time read below sees — the commit's
+        #: deletes and index changes are checked against it
+        self.base = _lake_head(table_path) if self.is_pk or overwrite else None
         fmt = info.options.get("file.format", "parquet")
         if fmt not in ("parquet", "orc", "avro"):
             raise RuntimeError(
@@ -1038,27 +1041,15 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         self.seq_base = 0
         self.before = None
         if self.is_pk or overwrite:
-            before = plan_paimon_files(table_path)
+            before = plan_paimon_files(table_path, snapshot=self.base)
             self.seq_base = (
                 max((e.max_seq for e in before), default=-1) + 1
             )
             if overwrite:
                 #: overwrite replaces the WHOLE visible table — DELETE
-                #: entries for every file live at plan time (same race
-                #: window as overwrite_lake, which plans at call time)
-                self.before = [
-                    {
-                        "partition": dict(e.partition),
-                        "bucket": e.bucket,
-                        "file_name": e.file_name,
-                        "file_size": e.file_size,
-                        "row_count": e.row_count,
-                        "schema_id": e.schema_id,
-                        "max_seq": e.max_seq,
-                        "level": e.level,
-                    }
-                    for e in before
-                ]
+                #: every file live at plan time (same race window as
+                #: overwrite_lake, which plans at call time)
+                self.before = before
 
     def _load_dyn_index(self) -> None:
         """Driver-side snapshot of the lake's HASH index for executor
@@ -1082,7 +1073,7 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         info = self.info
         part_keys = list(info.partition_keys)
         part_types = [info.spark_schema[k].dataType for k in part_keys]
-        entries = plan_paimon_hash_index(self.table_path)
+        entries = plan_paimon_hash_index(self.table_path, snapshot=self.base)
         limit = int(
             info.options.get(
                 "dynamic-bucket.frontdoor-index-limit-bytes", str(32 << 20)
@@ -1533,7 +1524,6 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         part_keys = list(info.partition_keys)
         part_types = [info.spark_schema[k].dataType for k in part_keys]
         entries = []
-        n_rows = 0
         dyn_new: dict = {}
         for m in messages:
             if m is None:
@@ -1572,7 +1562,6 @@ class PaimonLakeBatchWriter(DataSourceWriter):
                             ),
                         }
                     )
-                    n_rows += int(f["rows"])
                     continue
                 rel, pvals, rows, emb, extra, stats = f
                 if rows == 0:
@@ -1601,148 +1590,77 @@ class PaimonLakeBatchWriter(DataSourceWriter):
                         ),
                     }
                 )
-                n_rows += rows
+        if not entries and not self.overwrite:
+            return  # empty append is a successful no-op, like every
+            # standard Spark sink (parquet/JDBC) — no snapshot commits
+        # dynamic bucket: each touched bucket's index file becomes its
+        # old hashcodes (none for an overwrite, which REBUILDS the HASH
+        # index from the new data alone) plus its new ones
+        index_added = self._stage_hash_index(dyn_new) if self.dynamic else []
         if self.overwrite:
             # whole-table INSERT OVERWRITE (overwrite_lake semantics):
-            # DELETE every file visible at plan time, drop the DV index
-            # (nothing it marked survives), explicit new total — even an
-            # empty df commits (it replaces the table with nothing)
-            delete_entries = [
-                {
-                    "_VERSION": 2,
-                    "_KIND": 1,
-                    "_PARTITION": encode_binary_row(
-                        [e["partition"][k] for k in part_keys], part_types
-                    ),
-                    "_BUCKET": e["bucket"],
-                    "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-                    "_FILE": _spec_file_meta(
-                        e["file_name"],
-                        e["file_size"],
-                        e["row_count"],
-                        schema_id=e["schema_id"],
-                        max_seq=e["max_seq"],
-                        level=e["level"],
-                    ),
-                }
-                for e in self.before
-            ]
-            overwrite_index = None
-            if self.dynamic and dyn_new:
-                # dynamic overwrite REBUILDS the HASH index from the new
-                # data alone — dropping it would let a later write
-                # re-assign an existing key to a different bucket
-                # (key split across buckets = wrong merge); carrying the
-                # old entries would resurrect deleted keys' assignments
-                import json as _json
-                import uuid as _uuid
-
-                import numpy as np
-
-                from paimon_python_spark.dynamic_bucket import (
-                    pending_to_entries,
-                    write_hash_index_file,
-                    write_index_manifest,
-                )
-
-                os.makedirs(
-                    os.path.join(self.table_path, "index"), exist_ok=True
-                )
-                pending = []
-                for (pj, bucket), hs in sorted(dyn_new.items()):
-                    merged = np.array(sorted(hs), dtype=np.int32)
-                    idx_file = f"index-{_uuid.uuid4().hex}-0"
-                    size = write_hash_index_file(
-                        os.path.join(self.table_path, "index", idx_file),
-                        merged,
-                    )
-                    pvals = _json.loads(pj)
-                    pending.append(
-                        {
-                            "part_json": pj,
-                            "part_values": [pvals[k] for k in part_keys],
-                            "bucket": int(bucket),
-                            "file": idx_file,
-                            "size": size,
-                            "rows": len(merged),
-                        }
-                    )
-                fresh, _replaced = pending_to_entries(info, pending)
-                overwrite_index = write_index_manifest(
-                    self.table_path, fresh
-                )
+            # DELETE every file visible at plan time and replace the
+            # whole index — even an empty df commits (it replaces the
+            # table with nothing)
             _commit_lake_snapshot(
                 self.table_path,
                 info,
-                delete_entries + entries,
-                n_rows,
+                entries,
                 commit_kind="OVERWRITE",
-                index_manifest=overwrite_index,
-                total_record_count=n_rows,
+                deleted=self.before,
+                index_added=index_added,
+                index_retired="all",
+                base=self.base,
             )
             return
-        if not entries:
-            return  # empty append is a successful no-op, like every
-            # standard Spark sink (parquet/JDBC) — no snapshot commits
-        from paimon_python_spark.paimon_lake import _INHERIT_INDEX
-
-        index_manifest = _INHERIT_INDEX
-        if self.dynamic and dyn_new:
-            # union each touched bucket's NEW key hashcodes into a fresh
-            # index file; the merged index manifest carries every other
-            # entry (DVs included) forward verbatim
-            import json as _json
-            import uuid as _uuid
-
-            import numpy as np
-
-            from paimon_python_spark.dynamic_bucket import (
-                read_hash_index_file,
-                write_hash_index_file,
-                write_merged_index_manifest,
-            )
-
-            os.makedirs(
-                os.path.join(self.table_path, "index"), exist_ok=True
-            )
-            pending = []
-            for (pj, bucket), hs in sorted(dyn_new.items()):
-                new = np.array(sorted(hs), dtype=np.int32)
-                old_name = self._dyn_old_files.get((pj, bucket))
-                if old_name is not None:
-                    old = read_hash_index_file(
-                        os.path.join(self.table_path, "index", old_name)
-                    )
-                    merged = np.concatenate([old, np.setdiff1d(new, old)])
-                else:
-                    merged = new
-                idx_file = f"index-{_uuid.uuid4().hex}-0"
-                size = write_hash_index_file(
-                    os.path.join(self.table_path, "index", idx_file), merged
-                )
-                pvals = _json.loads(pj)
-                pending.append(
-                    {
-                        "part_json": pj,
-                        "part_values": [pvals[k] for k in part_keys],
-                        "bucket": int(bucket),
-                        "file": idx_file,
-                        "size": size,
-                        "rows": len(merged),
-                    }
-                )
-            name = write_merged_index_manifest(
-                self.table_path, info, pending
-            )
-            if name is not None:
-                index_manifest = name
         _commit_lake_snapshot(
             self.table_path,
             info,
             entries,
-            n_rows,
-            index_manifest=index_manifest,
+            index_added=index_added,
+            base=self.base,
         )
+
+    def _stage_hash_index(self, dyn_new: dict) -> list:
+        """Write one HASH index file per touched (partition, bucket) and
+        return their index manifest entries."""
+        import json
+        import uuid
+
+        import numpy as np
+
+        from paimon_python_spark.dynamic_bucket import (
+            pending_to_entries,
+            read_hash_index_file,
+            write_hash_index_file,
+        )
+
+        os.makedirs(os.path.join(self.table_path, "index"), exist_ok=True)
+        pending = []
+        for (pj, bucket), hs in sorted(dyn_new.items()):
+            merged = np.array(sorted(hs), dtype=np.int32)
+            old_name = None if self.overwrite else self._dyn_old_files.get((pj, bucket))
+            if old_name is not None:
+                old = read_hash_index_file(
+                    os.path.join(self.table_path, "index", old_name)
+                )
+                merged = np.concatenate([old, np.setdiff1d(merged, old)])
+            idx_file = f"index-{uuid.uuid4().hex}-0"
+            size = write_hash_index_file(
+                os.path.join(self.table_path, "index", idx_file), merged
+            )
+            pvals = json.loads(pj)
+            pending.append(
+                {
+                    "part_json": pj,
+                    "part_values": [pvals[k] for k in self.info.partition_keys],
+                    "bucket": int(bucket),
+                    "file": idx_file,
+                    "size": size,
+                    "rows": len(merged),
+                }
+            )
+        return pending_to_entries(self.info, pending)
 
     def abort(self, messages) -> None:
         for m in messages:

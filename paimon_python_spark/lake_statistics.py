@@ -204,12 +204,7 @@ def analyze_lake(
         },
     )
     return _commit_lake_snapshot(
-        table_path,
-        info,
-        entries=[],
-        n_rows=0,
-        commit_kind="ANALYZE",
-        statistics=name,
+        table_path, info, [], commit_kind="ANALYZE", statistics=name
     )
 
 

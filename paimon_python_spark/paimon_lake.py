@@ -2102,13 +2102,11 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
 
     PK lakes dispatch to :func:`write_lake_pk_append` (fixed-bucket
     hash + level-0 key-value files); avro lakes write through the
-    engine's own codec executor-side. Concurrency: the snapshot file is
-    created with
-    O_EXCL, so a concurrent committer loses exactly one of the two —
-    retry on ``FileExistsError`` (real Paimon's rename-based commit has
-    the same winner-takes-the-id semantics)."""
+    engine's own codec executor-side. Concurrency: an append conflicts
+    with nothing, so losing the snapshot race to a concurrent committer
+    only re-forms the snapshot on the new head
+    (:func:`_commit_lake_snapshot`)."""
     import datetime
-    import json
     import os
     import shutil
     import tempfile
@@ -2120,16 +2118,9 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
 
     from paimon_python_spark.paimon_import import (
         DEFAULT_PARTITION_NAME,
-        MANIFEST_LIST_SCHEMA,
-        MANIFEST_SCHEMA,
-        _EMPTY_STATS,
         _spec_file_meta,
         encode_binary_row,
-        latest_paimon_snapshot_id,
-        read_manifest_list,
-        read_paimon_snapshot,
     )
-    from paimon_python_spark.avro_codec import write_avro_records
 
     info = read_paimon_schema(table_path)
     if info.primary_keys:
@@ -2146,14 +2137,12 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
         # way: the group writer builds each file's index payload
         # EXECUTOR-side over the batch it just wrote; the staging-adopt
         # path below never sees the rows, so it cannot index them.
-        man_entries, n_rows = _distributed_lake_write(
+        man_entries, _ = _distributed_lake_write(
             table_path, info, df, fmt, kv=False
         )
         if not man_entries:
             raise ValueError("write_lake_append: empty input — nothing to commit")
-        return _commit_lake_snapshot(
-            table_path, info, man_entries, n_rows, watermark=watermark
-        )
+        return _commit_lake_snapshot(table_path, info, man_entries, watermark=watermark)
     if fmt not in ("parquet", "orc"):
         raise NotImplementedError(
             f"write_lake_append: file.format={fmt!r} not supported"
@@ -2267,17 +2256,10 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
         walk(stage, list(part_keys), {}, [])
         if not entries:
             raise ValueError("write_lake_append: empty input — nothing to commit")
-
-        n_rows = sum(e["_FILE"]["_ROW_COUNT"] for e in entries)
-        return _commit_lake_snapshot(
-            table_path, info, entries, n_rows, watermark=watermark
-        )
+        return _commit_lake_snapshot(table_path, info, entries, watermark=watermark)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
 
-
-#: sentinel: carry the previous snapshot's indexManifest forward
-_INHERIT_INDEX = object()
 
 #: target live entries per consolidated manifest (proxy for Paimon's
 #: manifest.target-file-size — entry records are ~KB-scale, so 4096
@@ -2358,235 +2340,366 @@ def _merge_manifests(table_path: str, info, prior: list, tag: str) -> list:
     return out
 
 
+class LakeCommitConflict(RuntimeError):
+    """A lake commit's plan no longer holds at the snapshot it would
+    commit on: a file it deletes or marks is no longer live, or an
+    index group it replaces or retires changed since it planned.
+    Retrying the publish cannot fix that — re-plan from the new head."""
+
+
+def _lake_head(table_path: str) -> dict:
+    """The lake's newest snapshot (``{}`` before the first commit),
+    found by listing ``snapshot/``: the LATEST hint is written after
+    the snapshot file, so it can lag a concurrent committer."""
+    import os
+
+    from paimon_python_spark.paimon_import import read_paimon_snapshot
+
+    sdir = os.path.join(table_path, "snapshot")
+    ids = [
+        int(n[len("snapshot-"):])
+        for n in (os.listdir(sdir) if os.path.isdir(sdir) else ())
+        if n.startswith("snapshot-") and n[len("snapshot-"):].isdigit()
+    ]
+    return read_paimon_snapshot(table_path, max(ids)) if ids else {}
+
+
+def _publish_lake_snapshot(table_path: str, build) -> dict:
+    """Publish the next snapshot of a lake: ``build(head_id, head)``
+    returns the snapshot dict for id ``head_id + 1``, formed against
+    the head found by listing. The snapshot file is created O_EXCL, so
+    of two committers racing for one id exactly one wins; the loser
+    rebuilds against the new head (real Paimon's rename-based commit
+    has the same winner-takes-the-id semantics). ``build`` may raise
+    to give up. Returns the published snapshot."""
+    import json
+    import os
+    import random
+    import time
+
+    sdir = os.path.join(table_path, "snapshot")
+    os.makedirs(sdir, exist_ok=True)
+    for attempt in range(20):
+        if attempt:
+            # jittered backoff: N committers retrying in lockstep
+            # re-collide; the rebuild is KB-scale metadata
+            time.sleep(random.uniform(0, 0.02 * attempt))
+        head = _lake_head(table_path)
+        head_id = int(head.get("id") or 0)
+        snap = build(head_id, head)
+        try:
+            fd = os.open(
+                os.path.join(sdir, f"snapshot-{head_id + 1}"),
+                os.O_WRONLY | os.O_CREAT | os.O_EXCL,
+            )
+        except FileExistsError:
+            continue
+        with os.fdopen(fd, "w") as f:
+            json.dump(snap, f)
+        write_hint_atomic(os.path.join(sdir, "LATEST"), head_id + 1)
+        return snap
+    raise RuntimeError(
+        "lake commit: lost the snapshot race 20 times — "
+        "another committer is writing faster than we can re-plan"
+    )
+
+
+def _index_group(r: dict) -> tuple:
+    """(index type, partition bytes, bucket) of an index manifest entry
+    — the unit a new index entry supersedes."""
+    return (
+        r.get("_INDEX_TYPE"),
+        bytes(r.get("_PARTITION") or b""),
+        int(r.get("_BUCKET") or 0),
+    )
+
+
+def _file_groups(info, files, index_types) -> set:
+    """Index groups of the (partition, bucket) groups ``files`` live in,
+    one per index type in ``index_types``."""
+    from paimon_python_spark.paimon_import import encode_binary_row
+
+    keys = list(info.partition_keys)
+    types = [info.spark_schema[k].dataType for k in keys]
+    return {
+        (t, encode_binary_row([e.partition[k] for k in keys], types), e.bucket)
+        for e in files
+        for t in index_types
+    }
+
+
+def _fold_index_entries(head_entries: list, added, retired) -> list:
+    """The commit's index: the head's live entries minus the retired
+    groups (``"all"`` retires every group) and minus every group a new
+    entry supersedes, plus the new entries."""
+    if retired == "all":
+        return list(added)
+    gone = set(retired) | {_index_group(r) for r in added}
+    return [r for r in head_entries if _index_group(r) not in gone] + list(added)
+
+
+def _check_lake_conflicts(
+    table_path: str, info, base: dict, head: dict, deleted, index_added, index_retired
+) -> None:
+    """Raise :class:`LakeCommitConflict` when a commit planned against
+    ``base`` no longer applies to ``head``: a file it deletes, or a
+    file its new deletion vectors mark, is no longer live; or an index
+    group it replaces or retires has different entries than at
+    ``base``."""
+    from paimon_python_spark.paimon_import import (
+        DELETION_VECTORS_INDEX,
+        decode_binary_row,
+        live_index_entries,
+    )
+
+    def key(part: dict, bucket: int, name: str) -> tuple:
+        return (tuple(sorted(part.items())), int(bucket), name)
+
+    part_keys = list(info.partition_keys)
+    part_types = [info.spark_schema[k].dataType for k in part_keys]
+    needed = {key(e.partition, e.bucket, e.file_name) for e in deleted}
+    for r in index_added:
+        if r.get("_INDEX_TYPE") == DELETION_VECTORS_INDEX:
+            values = (
+                decode_binary_row(bytes(r["_PARTITION"]), part_types)
+                if part_keys
+                else []
+            )
+            part = dict(zip(part_keys, values))
+            needed.update(
+                key(part, r["_BUCKET"], item["f0"])
+                for item in r["_DELETIONS_VECTORS_RANGES"] or ()
+            )
+    if needed:
+        live = {
+            key(e.partition, e.bucket, e.file_name)
+            for e in plan_paimon_files(table_path, snapshot=head)
+        }
+        if not needed <= live:
+            raise LakeCommitConflict(
+                f"lake commit: {len(needed - live)} file(s) this commit "
+                f"deletes or marks are no longer live at snapshot {head.get('id')}"
+            )
+    groups = (
+        None
+        if index_retired == "all"
+        else set(index_retired) | {_index_group(r) for r in index_added}
+    )
+    if groups is None or groups:
+
+        def view(snap: dict) -> set:
+            return {
+                (_index_group(r), r["_FILE_NAME"])
+                for r in live_index_entries(table_path, snapshot=snap)
+                if groups is None or _index_group(r) in groups
+            }
+
+        if view(base) != view(head):
+            raise LakeCommitConflict(
+                "lake commit: an index group this commit replaces changed "
+                f"between snapshot {base.get('id')} and {head.get('id')}"
+            )
+
+
 def _commit_lake_snapshot(
     table_path: str,
     info,
-    entries: list,
-    n_rows: int,
+    added: list,
     commit_kind: str = "APPEND",
-    index_manifest=_INHERIT_INDEX,
-    total_record_count: Optional[int] = None,
+    deleted=(),
+    index_added=(),
+    index_retired=(),
+    base: Optional[dict] = None,
     changelog_entries: Optional[list] = None,
     statistics: Optional[str] = None,
     watermark: Optional[int] = None,
 ) -> int:
-    """Driver-side spec-format metadata commit of ``entries`` (new
-    manifest records — ADD ``_KIND=0`` and, for COMPACT commits,
-    DELETE ``_KIND=1`` for the rewritten-away inputs; data files
-    already in place under uuid names) as snapshot N+1 with CAS-style
-    retry: the snapshot file is created O_EXCL, so a concurrent
-    committer loses exactly one of the two and the loser re-plans only
-    the KB-scale manifest metadata against the new head — the same
-    winner-takes-the-id semantics as real Paimon's rename-based
-    commit. Shared by the append, PK-write, and compaction paths.
-    ``index_manifest``: default inherits the previous snapshot's DV
-    index; pass ``None`` to drop it (compaction physically applied the
-    marks). ``total_record_count``: explicit new total (compaction
-    rewrites the world); default adds ``n_rows`` to the previous
-    total. ``changelog_entries``: ADD records for this commit's
-    changelog files (changelog-producer=input) — written as their own
-    manifest + manifest list and referenced from the snapshot's
-    ``changelogManifestList``, the shape streaming readers scan.
-    Returns the new snapshot id."""
-    import json
+    """The lake committer: every snapshot the package creates on a lake
+    is formed here from the commit's CHANGES, against the head it is
+    published on (inside :func:`_publish_lake_snapshot`'s retry loop):
+
+    - ``added``: ADD manifest records (``_KIND=0``) of data files
+      already in place under uuid names;
+    - ``deleted``: planned :class:`PaimonFileEntry` files to remove —
+      committed as DELETE records (``_KIND=1``) in the same delta
+      manifest;
+    - ``index_added``: new index manifest entries (HASH or
+      DELETION_VECTORS); each supersedes the head's live entries of
+      its (index type, partition, bucket) group;
+    - ``index_retired``: index groups to drop, or ``"all"`` (an
+      overwrite replaces the whole index).
+
+    A commit that changes no index inherits the head's
+    ``indexManifest`` without reading it. A commit with no data
+    changes writes an empty delta manifest list. ``totalRecordCount``
+    is the head's plus added minus deleted rows; ``deltaRecordCount``
+    the added rows.
+
+    ``base`` is the snapshot the changes were planned against (required
+    with deletes or index changes). When the head differs from it, the
+    commit raises :class:`LakeCommitConflict` instead of retrying if a
+    file it deletes (or its new deletion vectors mark) is no longer
+    live at the head, or an index group it replaces or retires has
+    other entries at the head than at ``base`` — Paimon's
+    ``FileStoreCommitImpl`` conflict check. Losing only the snapshot id
+    to a commit that touched none of that re-forms the snapshot on the
+    new head. ``changelog_entries``: ADD records of this commit's
+    changelog files, listed from ``changelogManifestList``.
+    ``statistics``: an ANALYZE commit's statistics file. Returns the
+    new snapshot id."""
     import os
+    import time
     import uuid
 
     from paimon_python_spark.avro_codec import write_avro_records
     from paimon_python_spark.paimon_import import (
+        INDEX_MANIFEST_SCHEMA,
         MANIFEST_LIST_SCHEMA,
         MANIFEST_SCHEMA,
         _EMPTY_STATS,
-        latest_paimon_snapshot_id,
+        _spec_file_meta,
+        encode_binary_row,
+        live_index_entries,
         partition_stats_for_entries,
         read_manifest_list_entries,
-        read_paimon_snapshot,
     )
 
-    part_types_c = [info.spark_schema[k].dataType for k in info.partition_keys]
-    if True:
-        for attempt in range(20):
-            if attempt:
-                # jittered backoff: N committers retrying in lockstep
-                # re-collide; the re-plan itself is KB-scale metadata,
-                # so waiting beats burning attempts (20 losses deep the
-                # lake has 20 NEW snapshots — we're making progress
-                # system-wide either way)
-                import random as _random
-                import time as _time
+    if (deleted or index_added or index_retired) and base is None:
+        raise ValueError("lake commit: deletes and index changes need a base")
+    mdir = os.path.join(table_path, "manifest")
+    part_keys = list(info.partition_keys)
+    part_types = [info.spark_schema[k].dataType for k in part_keys]
+    tag = uuid.uuid4().hex[:12]
+    records = [
+        {
+            "_VERSION": 2,
+            "_KIND": 1,
+            "_PARTITION": encode_binary_row(
+                [e.partition[k] for k in part_keys], part_types
+            ),
+            "_BUCKET": e.bucket,
+            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
+            "_FILE": _spec_file_meta(
+                e.file_name,
+                e.file_size,
+                e.row_count,
+                schema_id=e.schema_id,
+                max_seq=e.max_seq,
+                level=e.level,
+            ),
+        }
+        for e in deleted
+    ] + list(added)
 
-                _time.sleep(_random.uniform(0, 0.02 * attempt))
-            # the LATEST hint can lag a concurrent committer (it is
-            # written after the snapshot file) — trust the directory
-            sdir = os.path.join(table_path, "snapshot")
-            os.makedirs(sdir, exist_ok=True)
-            ids = [
-                int(n.split("-")[1])
-                for n in os.listdir(sdir)
-                if n.startswith("snapshot-")
-            ]
-            if ids:
-                prev_id = max(latest_paimon_snapshot_id(table_path), max(ids))
-                prev = read_paimon_snapshot(table_path, prev_id)
-            else:
-                # bootstrapping a freshly-created lake: this commit
-                # writes snapshot-1 against an empty prior state
-                prev_id, prev = 0, {}
-            # prior manifests carry forward with their ORIGINAL list
-            # records — partition stats written by any committer (this
-            # engine or a JVM) survive re-listing, so manifest-level
-            # skipping keeps working as history accretes
-            prior: list = []
-            for lst in (prev.get("baseManifestList"), prev.get("deltaManifestList")):
-                if lst:
-                    prior.extend(read_manifest_list_entries(table_path, lst))
-            tag = uuid.uuid4().hex[:12]
-            # MANIFEST MERGE (Paimon manifest.merge-min-count, default
-            # 30): without it the base list grows one manifest per
-            # commit FOREVER and every plan opens thousands of tiny
-            # manifests at 100 TB. Above the threshold, fold the prior
-            # manifests' raw records into their live ADD set and
-            # rewrite it as few partition-clustered manifests (tight
-            # _PARTITION_STATS), leaving the new commit's entries in
-            # the delta as usual. Old snapshots keep their old lists —
-            # time travel and incremental reads are untouched.
-            merge_min = int(info.options.get("manifest.merge-min-count", "30"))
-            if len(prior) >= merge_min:
-                prior = _merge_manifests(table_path, info, prior, tag)
-            mname = f"manifest-{tag}-0.avro"
-            write_avro_records(
-                os.path.join(table_path, "manifest", mname), MANIFEST_SCHEMA, entries
+    def list_entry(name: str, stats=None) -> dict:
+        return {
+            "_VERSION": 2,
+            "_FILE_NAME": name,
+            "_FILE_SIZE": os.path.getsize(os.path.join(mdir, name)),
+            "_NUM_ADDED_FILES": 0,
+            "_NUM_DELETED_FILES": 0,
+            "_PARTITION_STATS": stats or _EMPTY_STATS,
+            "_SCHEMA_ID": info.id,
+        }
+
+    def write_list(name: str, items: list) -> str:
+        write_avro_records(os.path.join(mdir, name), MANIFEST_LIST_SCHEMA, items)
+        return name
+
+    # the delta and changelog lists depend only on this commit's own
+    # files, so they are written once, whatever the retries
+    delta = []
+    if records:
+        mname = f"manifest-{tag}-0.avro"
+        write_avro_records(os.path.join(mdir, mname), MANIFEST_SCHEMA, records)
+        delta.append(list_entry(mname, partition_stats_for_entries(records, part_types)))
+    dlname = write_list(f"manifest-list-{tag}-delta.avro", delta)
+    clname = None
+    cl_rows = 0
+    if changelog_entries:
+        cmname = f"manifest-{tag}-cl.avro"
+        write_avro_records(os.path.join(mdir, cmname), MANIFEST_SCHEMA, changelog_entries)
+        clname = write_list(f"manifest-list-{tag}-changelog.avro", [list_entry(cmname)])
+        cl_rows = sum(int(e["_FILE"]["_ROW_COUNT"]) for e in changelog_entries)
+    n_added = sum(int(e["_FILE"]["_ROW_COUNT"]) for e in added)
+    n_deleted = sum(int(e.row_count) for e in deleted)
+    no_watermark = -9223372036854775808  # Long.MIN_VALUE, the spec sentinel
+
+    def build(head_id: int, head: dict) -> dict:
+        if base is not None and head_id != int(base.get("id") or 0):
+            _check_lake_conflicts(
+                table_path, info, base, head, deleted, index_added, index_retired
             )
-
-            def list_entry(name: str, stats=None) -> dict:
-                return {
-                    "_VERSION": 2,
-                    "_FILE_NAME": name,
-                    "_FILE_SIZE": os.path.getsize(
-                        os.path.join(table_path, "manifest", name)
-                    ),
-                    "_NUM_ADDED_FILES": 0,
-                    "_NUM_DELETED_FILES": 0,
-                    "_PARTITION_STATS": stats or _EMPTY_STATS,
-                    "_SCHEMA_ID": info.id,
-                }
-
-            blname = f"manifest-list-{tag}-base.avro"
-            dlname = f"manifest-list-{tag}-delta.avro"
-            write_avro_records(
-                os.path.join(table_path, "manifest", blname),
-                MANIFEST_LIST_SCHEMA,
-                prior,
-            )
-            write_avro_records(
-                os.path.join(table_path, "manifest", dlname),
-                MANIFEST_LIST_SCHEMA,
-                [
-                    list_entry(
-                        mname, partition_stats_for_entries(entries, part_types_c)
+        attempt_tag = uuid.uuid4().hex[:12]
+        # prior manifests carry forward with their ORIGINAL list
+        # records — partition stats written by any committer (this
+        # engine or a JVM) survive re-listing
+        prior: list = []
+        for lst in (head.get("baseManifestList"), head.get("deltaManifestList")):
+            if lst:
+                prior.extend(read_manifest_list_entries(table_path, lst))
+        # MANIFEST MERGE (Paimon manifest.merge-min-count, default 30):
+        # without it the base list grows one manifest per commit
+        # forever. Above the threshold, the prior manifests fold into
+        # few partition-clustered ones; old snapshots keep their lists
+        if len(prior) >= int(info.options.get("manifest.merge-min-count", "30")):
+            prior = _merge_manifests(table_path, info, prior, attempt_tag)
+        index_manifest = head.get("indexManifest")
+        if index_added or index_retired:
+            head_index = live_index_entries(table_path, snapshot=head)
+            index = _fold_index_entries(head_index, index_added, index_retired)
+            if index_added or len(index) != len(head_index):
+                index_manifest = None
+                if index:
+                    index_manifest = f"index-manifest-{attempt_tag}.avro"
+                    write_avro_records(
+                        os.path.join(mdir, index_manifest), INDEX_MANIFEST_SCHEMA, index
                     )
-                ],
-            )
-            clname = None
-            cl_rows = 0
-            if changelog_entries:
-                cmname = f"manifest-{tag}-cl.avro"
-                write_avro_records(
-                    os.path.join(table_path, "manifest", cmname),
-                    MANIFEST_SCHEMA,
-                    changelog_entries,
-                )
-                clname = f"manifest-list-{tag}-changelog.avro"
-                write_avro_records(
-                    os.path.join(table_path, "manifest", clname),
-                    MANIFEST_LIST_SCHEMA,
-                    [list_entry(cmname)],
-                )
-                cl_rows = sum(
-                    int(e["_FILE"]["_ROW_COUNT"]) for e in changelog_entries
-                )
-            new_id = prev_id + 1
-            snap = {
-                "version": 3,
-                "id": new_id,
-                "schemaId": info.id,
-                "baseManifestList": blname,
-                "deltaManifestList": dlname,
-                "changelogManifestList": clname,
-                # CARRY THE DV INDEX FORWARD by default: an append does
-                # not touch the deletion vectors, but a snapshot without
-                # indexManifest would silently resurrect every
-                # DV-deleted row. Compaction passes None — the marks
-                # were physically applied to the rewritten files.
-                "indexManifest": (
-                    prev.get("indexManifest")
-                    if index_manifest is _INHERIT_INDEX
-                    else index_manifest
-                ),
-                "commitUser": "paimon_python_spark",
-                "commitIdentifier": new_id,
-                "commitKind": commit_kind,
-                # real wall-clock commit time: JVM readers time-travel
-                # by timeMillis (scan.timestamp-millis); writing 0
-                # would break that interop
-                "timeMillis": int(__import__("time").time() * 1000),
-                "logOffsets": {},
-                # spec: only an ANALYZE commit carries a statistics
-                # file name; ordinary commits leave it null and readers
-                # walk back (lake_statistics.read_lake_statistics)
-                "statistics": statistics,
-                "totalRecordCount": (
-                    total_record_count
-                    if total_record_count is not None
-                    else int(prev.get("totalRecordCount") or 0) + n_rows
-                ),
-                "deltaRecordCount": n_rows,
-                "changelogRecordCount": cl_rows,
-                # monotone event-time watermark: max(previous, this
-                # commit's); Long.MIN_VALUE = never progressed (the
-                # spec sentinel). Drives tag.automatic-creation=watermark
-                "watermark": max(
-                    int(prev.get("watermark") or -9223372036854775808)
-                    if prev
-                    else -9223372036854775808,
-                    watermark if watermark is not None else -9223372036854775808,
-                ),
-            }
-            spath = os.path.join(table_path, "snapshot", f"snapshot-{new_id}")
-            try:
-                # O_EXCL: a concurrent committer racing for the same id
-                # loses exactly one of the two — loser re-plans above
-                fd = os.open(spath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            except FileExistsError:
-                continue
-            with os.fdopen(fd, "w") as f:
-                json.dump(snap, f)
-            write_hint_atomic(
-                os.path.join(table_path, "snapshot", "LATEST"), new_id
-            )
-            # INLINE EXPIRATION (Paimon expires on commit when
-            # snapshot.num-retained.max is set): without it a
-            # continuously-written lake accretes snapshots + manifests
-            # forever. Option-gated — absent means keep everything, as
-            # every test/time-travel fixture expects. Tags and
-            # consumers still pin files (expire_lake_snapshots rules).
-            retain = info.options.get("snapshot.num-retained.max")
-            if retain is not None and new_id > int(retain):
-                try:
-                    expire_lake_snapshots(table_path, int(retain))
-                except Exception:
-                    pass  # expiry is maintenance: never fail the commit
-            # AUTOMATIC TAG CREATION (Paimon tag.automatic-creation):
-            # the first commit of each period pins itself as a tag named
-            # for the period, and tag.num-retained-max reaps the oldest
-            # auto tags — the cheap "daily snapshot" retention pattern
-            if info.options.get("tag.automatic-creation"):
-                _auto_create_lake_tag(table_path, info, snap)
-            return new_id
-        raise RuntimeError(
-            "lake commit: lost the snapshot race 20 times — "
-            "another committer is writing faster than we can re-plan"
-        )
+        new_id = head_id + 1
+        return {
+            "version": 3,
+            "id": new_id,
+            "schemaId": info.id,
+            "baseManifestList": write_list(f"manifest-list-{attempt_tag}-base.avro", prior),
+            "deltaManifestList": dlname,
+            "changelogManifestList": clname,
+            "indexManifest": index_manifest,
+            "commitUser": "paimon_python_spark",
+            "commitIdentifier": new_id,
+            "commitKind": commit_kind,
+            # real wall-clock commit time: JVM readers time-travel by
+            # timeMillis (scan.timestamp-millis)
+            "timeMillis": int(time.time() * 1000),
+            "logOffsets": {},
+            # spec: only an ANALYZE commit names a statistics file;
+            # readers walk back (lake_statistics.read_lake_statistics)
+            "statistics": statistics,
+            "totalRecordCount": int(head.get("totalRecordCount") or 0) + n_added - n_deleted,
+            "deltaRecordCount": n_added,
+            "changelogRecordCount": cl_rows,
+            # monotone event-time watermark: max(previous, this
+            # commit's); drives tag.automatic-creation=watermark
+            "watermark": max(
+                int(head.get("watermark") or no_watermark),
+                watermark if watermark is not None else no_watermark,
+            ),
+        }
+
+    snap = _publish_lake_snapshot(table_path, build)
+    # INLINE EXPIRATION (Paimon expires on commit when
+    # snapshot.num-retained.max is set). Option-gated — absent means
+    # keep everything. Tags and consumers still pin files.
+    retain = info.options.get("snapshot.num-retained.max")
+    if retain is not None and snap["id"] > int(retain):
+        try:
+            expire_lake_snapshots(table_path, int(retain))
+        except Exception:
+            pass  # expiry is maintenance: never fail the commit
+    # AUTOMATIC TAG CREATION (Paimon tag.automatic-creation): the first
+    # commit of each period pins itself as a tag named for the period
+    if info.options.get("tag.automatic-creation"):
+        _auto_create_lake_tag(table_path, info, snap)
+    return snap["id"]
 
 
 def _bloom_option_cols(info) -> tuple:
@@ -3143,7 +3256,7 @@ def _distributed_lake_write(
             # join their recorded bucket, new keys capacity-fill, and
             # the touched buckets' index files rewrite executor-side.
             # Callers stage the new index metas via dyn_index_out and
-            # commit them in the merged index manifest; a caller that
+            # commit them as the commit's new HASH entries; a caller that
             # doesn't pass it keeps the reference's refusal.
             if dyn_index_out is None:
                 raise TypeError(
@@ -3623,6 +3736,8 @@ def write_lake_pk_append(
         set(info.partition_keys) <= set(info.primary_keys)
     )
     dyn_out: Optional[list] = [] if dynamic else None
+    # the head the HASH index is routed against (read before any plan)
+    base = _lake_head(table_path) if dynamic else None
     fmt = info.options.get("file.format", "parquet")
     if fmt not in ("parquet", "orc", "avro"):
         raise NotImplementedError(
@@ -3985,33 +4100,25 @@ def write_lake_pk_append(
     )
     try:
         if produce_cl:
-            man_entries, n_rows, cl_entries = result
+            man_entries, _, cl_entries = result
         else:
-            man_entries, n_rows = result
+            man_entries, _ = result
             cl_entries = lookup_entries
         if not man_entries:
             raise ValueError(
                 "write_lake_pk_append: empty input — nothing to commit"
             )
-        index_manifest = _INHERIT_INDEX
-        if dyn_out:
-            # dynamic-bucket commit: new key→bucket assignments become the
-            # commit's merged index manifest (previous HASH + DV entries
-            # carried forward, touched HASH buckets replaced)
-            from paimon_python_spark.dynamic_bucket import (
-                write_merged_index_manifest,
-            )
+        # dynamic-bucket commit: the new key→bucket assignments replace
+        # their buckets' HASH entries
+        from paimon_python_spark.dynamic_bucket import pending_to_entries
 
-            name = write_merged_index_manifest(table_path, info, dyn_out)
-            if name is not None:
-                index_manifest = name
         sid = _commit_lake_snapshot(
             table_path,
             info,
             man_entries,
-            n_rows,
             changelog_entries=cl_entries,
-            index_manifest=index_manifest,
+            index_added=pending_to_entries(info, dyn_out or []),
+            base=base,
             watermark=watermark,
         )
         if xp_router is not None and xp_location_cache is not None:
@@ -4999,8 +5106,9 @@ def fast_forward_lake_branch(table_path: str, name: str) -> int:
     partition directories first created on the branch (moved into
     main; file names are uuid-unique) and schema versions added by
     branch-side ALTERs. Main keeps its own history (time travel to
-    pre-publish main snapshots still works). Returns the new id."""
-    import json
+    pre-publish main snapshots still works). The publish is the lake
+    committer's own publish step, so a concurrent main commit costs a
+    rebuild, not a failure. Returns the new id."""
     import os
     import shutil
     import time as _time
@@ -5037,27 +5145,19 @@ def fast_forward_lake_branch(table_path: str, name: str) -> int:
                     shutil.move(os.path.join(dirpath, fn), dst)
         shutil.rmtree(full)
         os.symlink(os.path.join("..", "..", d), full)  # rejoin the pool
-    latest = latest_paimon_snapshot_id(table_path)
-    prev_total = (
-        int(read_paimon_snapshot(table_path, latest).get("totalRecordCount") or 0)
-        if latest
-        else 0
-    )
-    new_id = (latest or 0) + 1
-    snap = dict(head)
-    snap["id"] = new_id
-    snap["commitKind"] = "APPEND"
-    snap["commitUser"] = f"fast_forward:{name}"
-    snap["timeMillis"] = int(_time.time() * 1000)
-    snap["deltaRecordCount"] = (
-        int(head.get("totalRecordCount") or 0) - prev_total
-    )
-    spath = os.path.join(table_path, "snapshot", f"snapshot-{new_id}")
-    fd = os.open(spath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    with os.fdopen(fd, "w") as f:
-        json.dump(snap, f)
-    write_hint_atomic(os.path.join(table_path, "snapshot", "LATEST"), new_id)
-    return new_id
+
+    def build(main_id: int, main: dict) -> dict:
+        return dict(
+            head,
+            id=main_id + 1,
+            commitKind="APPEND",
+            commitUser=f"fast_forward:{name}",
+            timeMillis=int(_time.time() * 1000),
+            deltaRecordCount=int(head.get("totalRecordCount") or 0)
+            - int(main.get("totalRecordCount") or 0),
+        )
+
+    return _publish_lake_snapshot(table_path, build)["id"]
 
 
 def expire_lake_snapshots(
@@ -5326,18 +5426,16 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
     partition matches ``predicate`` (partition columns only) DELETEs in
     ONE spec OVERWRITE snapshot — a pure metadata commit, no data
     rewrite, no shuffle; the bytes stay on disk for time travel until
-    snapshot expiry reclaims them, exactly like real Paimon. DV marks
-    on dropped files drop with them; marks on kept files re-commit in
-    a fresh index manifest. Returns ``{"snapshot_id", "partitions_
+    snapshot expiry reclaims them, exactly like real Paimon. The
+    dropped (partition, bucket) groups' index entries (deletion
+    vectors, HASH key indexes) drop with them; every other entry
+    carries forward. Returns ``{"snapshot_id", "partitions_
     dropped", "files_dropped", "rows_dropped"}`` (snapshot_id None when
     nothing matched — real Paimon's drop of a missing partition is a
     no-op, not an error)."""
     from paimon_python_spark.paimon_import import (
-        _spec_file_meta,
-        encode_binary_row,
-        plan_paimon_files,
-        read_dv_index_entry,
-        read_paimon_snapshot,
+        DELETION_VECTORS_INDEX,
+        HASH_INDEX,
     )
 
     info = read_paimon_schema(table_path)
@@ -5350,7 +5448,8 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
             "drop_lake_partitions: predicate references no partition column"
         )
     ppred = _coerce_partition_literals(ppred, info)
-    before = plan_paimon_files(table_path)
+    base = _lake_head(table_path)
+    before = plan_paimon_files(table_path, snapshot=base)
     doomed = [
         e
         for e in before
@@ -5363,55 +5462,14 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
             "files_dropped": 0,
             "rows_dropped": 0,
         }
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
-    delete_entries = [
-        {
-            "_VERSION": 2,
-            "_KIND": 1,
-            "_PARTITION": encode_binary_row(
-                [e.partition[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": e.bucket,
-            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-            "_FILE": _spec_file_meta(
-                e.file_name,
-                e.file_size,
-                e.row_count,
-                schema_id=e.schema_id,
-                max_seq=e.max_seq,
-                level=e.level,
-            ),
-        }
-        for e in doomed
-    ]
-    # DV marks on surviving files re-commit; dropped files' marks go
-    # (same survival rule as partition-scoped compaction)
-    dropped_names = {e.file_name for e in doomed}
-    surviving: dict = {}
-    for r in plan_paimon_dv(table_path):
-        if r.data_file_name not in dropped_names:
-            import numpy as _np
-
-            pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-            cur = surviving.get(r.data_file_name)
-            surviving[r.data_file_name] = (
-                _np.union1d(cur, pos) if cur is not None else pos
-            )
-    im_name = (
-        _write_dv_index_manifest(table_path, info, surviving, before)
-        if surviving
-        else None
-    )
-    rows_dropped = sum(e.row_count for e in doomed)
-    prev_total = int(read_paimon_snapshot(table_path).get("totalRecordCount") or 0)
     sid = _commit_lake_snapshot(
         table_path,
         info,
-        delete_entries,
-        0,
+        [],
         commit_kind="OVERWRITE",
-        index_manifest=im_name,
-        total_record_count=prev_total - rows_dropped,
+        deleted=doomed,
+        index_retired=_file_groups(info, doomed, (DELETION_VECTORS_INDEX, HASH_INDEX)),
+        base=base,
     )
     return {
         "snapshot_id": sid,
@@ -5419,7 +5477,7 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
             {tuple(sorted(e.partition.items())) for e in doomed}
         ),
         "files_dropped": len(doomed),
-        "rows_dropped": rows_dropped,
+        "rows_dropped": sum(e.row_count for e in doomed),
     }
 
 
@@ -5681,8 +5739,8 @@ def compact_lake(
 
     - **append lake**: every live data file per (partition, bucket) is
       folded into one file per group, with DELETION VECTORS physically
-      applied (marked rows gone from the bytes) and the snapshot's
-      ``indexManifest`` dropped;
+      applied (marked rows gone from the bytes) and the rewritten
+      groups' deletion vectors retired from the index;
     - **PK lake**: the LSM merge is materialized — max sequence per key
       wins, ``-D`` rows drop — and each (partition, bucket) writes one
       max-level key-value file with a fresh sequence range past every
@@ -5697,16 +5755,21 @@ def compact_lake(
     field-id schema evolution to the LATEST schema — compaction
     upgrades old-schema files, as Paimon's does) and the write side is
     the executor-side group writer; only KB-scale per-file metadata
-    crosses the driver. A concurrent APPEND that wins the snapshot race
-    survives (its files are not in our DELETE set); its rows are simply
-    not compacted this round. Returns the new snapshot id.
+    crosses the driver. The rewrite reads the snapshot it planned, and
+    its commit keeps that plan honest: a concurrent APPEND that wins
+    the snapshot race survives (its files are not in our DELETE set;
+    its rows are simply not compacted this round), while a concurrent
+    commit that removed an input file (another compaction) or changed
+    an input group's deletion vectors (a DV delete) makes this commit
+    raise :class:`LakeCommitConflict` — publishing anyway would
+    duplicate or resurrect rows. Returns the new snapshot id.
 
     ``partition_filter`` (a partition-column predicate) scopes the
     rewrite — the 100 TB production form: only matching partitions'
     files fold; untouched files keep their manifest entries AND their
-    deletion-vector marks (the surviving marks re-commit in a fresh
-    index manifest; only rewritten files' marks drop, since those rows
-    are physically gone).
+    deletion-vector marks (their index entries carry forward; only the
+    rewritten groups' marks drop, since those rows are physically
+    gone).
 
     ``order_by`` turns the rewrite into Paimon's SORT COMPACTION
     (``--order_strategy order|zorder|hilbert --order_by a,b`` on the
@@ -5721,13 +5784,7 @@ def compact_lake(
     bit-interleave (operators/clustering.py); the only full-data cost
     is the one ``repartitionByRange`` shuffle a global re-cluster
     fundamentally requires."""
-    from paimon_python_spark.paimon_import import (
-        _spec_file_meta,
-        encode_binary_row,
-        plan_paimon_dv,
-        plan_paimon_files,
-        read_dv_index_entry,
-    )
+    from paimon_python_spark.paimon_import import DELETION_VECTORS_INDEX
 
     info = read_paimon_schema(table_path)
     if order_by:
@@ -5742,14 +5799,14 @@ def compact_lake(
         unknown = [c for c in order_by if c not in info.spark_schema.names]
         if unknown:
             raise ValueError(f"order_by references unknown columns {unknown}")
-    before = plan_paimon_files(table_path)
+    base = _lake_head(table_path)
+    before = plan_paimon_files(table_path, snapshot=base)
     if not before:
         raise ValueError("compact_lake: table has no live data files")
     fmt = info.options.get("file.format", "parquet")
     if fmt not in ("parquet", "orc", "avro"):
         raise NotImplementedError(f"compact_lake: file.format={fmt!r} not supported")
     part_keys = list(info.partition_keys)
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
 
     if partition_filter is not None:
         ppred = partition_filter.keep_only_fields(set(part_keys))
@@ -5783,7 +5840,7 @@ def compact_lake(
     # prunes the scan to the selected partitions (the partition-only
     # predicate is row-exact there) — and the merge stays closed, since
     # fixed-bucket keys never cross partitions.
-    rb = PaimonLakeTable(table_path).new_read_builder()
+    rb = PaimonLakeTable(table_path).new_read_builder().with_snapshot(base["id"])
     if partition_filter is not None:
         rb = rb.with_filter(partition_filter)
     if _bucket_groups is not None:
@@ -5842,7 +5899,7 @@ def compact_lake(
                 arrival_order=False,
                 dyn_index_out=dyn_out,
             )
-        add_entries, n_rows = _distributed_lake_write(
+        add_entries, _ = _distributed_lake_write(
             table_path,
             info,
             df,
@@ -5872,7 +5929,7 @@ def compact_lake(
         df = df.repartitionByRange(
             int(n_files), *part_keys_cols, *[F.col(c) for c in key_cols]
         )
-        add_entries, n_rows = _distributed_lake_write(
+        add_entries, _ = _distributed_lake_write(
             table_path,
             info,
             df,
@@ -5881,94 +5938,24 @@ def compact_lake(
             sort_cols=key_cols,
         )
     else:
-        add_entries, n_rows = _distributed_lake_write(
+        add_entries, _ = _distributed_lake_write(
             table_path, info, df, fmt, kv=False, single_file_per_group=True
         )
 
-    delete_entries = [
-        {
-            "_VERSION": 2,
-            "_KIND": 1,
-            "_PARTITION": encode_binary_row(
-                [e.partition[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": e.bucket,
-            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-            "_FILE": _spec_file_meta(
-                e.file_name,
-                e.file_size,
-                e.row_count,
-                schema_id=e.schema_id,
-                max_seq=e.max_seq,
-                level=e.level,
-            ),
-        }
-        for e in before
-    ]
-    # DV marks on UNTOUCHED files must survive a scoped compaction:
-    # re-commit them in a fresh index manifest (rewritten files' marks
-    # drop — those rows are physically gone from the new bytes)
-    rewritten = {e.file_name for e in before}
-    surviving: dict = {}
-    for r in plan_paimon_dv(table_path):
-        if r.data_file_name not in rewritten:
-            import numpy as _np
+    # the rewritten groups' deletion vectors are physically applied;
+    # the rewrite's staged HASH entries (dynamic-bucket self-heal)
+    # replace their buckets' entries
+    from paimon_python_spark.dynamic_bucket import pending_to_entries
 
-            pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-            cur = surviving.get(r.data_file_name)
-            surviving[r.data_file_name] = (
-                _np.union1d(cur, pos) if cur is not None else pos
-            )
-    im_name = (
-        _write_dv_index_manifest(
-            table_path,
-            info,
-            surviving,
-            plan_paimon_files(table_path),
-            pending=dyn_out,
-        )
-        if surviving
-        else None
-    )
-    if im_name is None:
-        # dynamic-bucket lakes: the HASH key index must survive the
-        # compaction even when every DV folded away (plus any self-heal
-        # assignments the rewrite staged in dyn_out)
-        from paimon_python_spark.dynamic_bucket import (
-            pending_to_entries,
-            write_index_manifest,
-        )
-        from paimon_python_spark.paimon_import import (
-            HASH_INDEX,
-            live_index_entries,
-        )
-
-        new_hash, replaced = pending_to_entries(info, dyn_out or [])
-        hash_keep = [
-            r
-            for r in live_index_entries(table_path)
-            if r.get("_INDEX_TYPE") == HASH_INDEX
-            and (
-                bytes(r.get("_PARTITION") or b""),
-                int(r.get("_BUCKET") or 0),
-            )
-            not in replaced
-        ] + new_hash
-        if hash_keep:
-            im_name = write_index_manifest(table_path, hash_keep)
-    from paimon_python_spark.paimon_import import read_paimon_snapshot
-
-    prev_total = int(
-        read_paimon_snapshot(table_path).get("totalRecordCount") or 0
-    )
     sid = _commit_lake_snapshot(
         table_path,
         info,
-        delete_entries + add_entries,
-        n_rows,
+        add_entries,
         commit_kind="COMPACT",
-        index_manifest=im_name,
-        total_record_count=prev_total - sum(e.row_count for e in before) + n_rows,
+        deleted=before,
+        index_added=pending_to_entries(info, dyn_out or []),
+        index_retired=_file_groups(info, before, (DELETION_VECTORS_INDEX,)),
+        base=base,
         changelog_entries=cl_entries,
     )
     if partition_filter is None and _bucket_groups is None:
@@ -6107,19 +6094,13 @@ def overwrite_lake(table_path: str, df) -> int:
     key-value files with a fresh sequence range (an overwrite is still
     an LSM table — later appends must win); append lakes write one file
     per (partition, task). Returns the new snapshot id."""
-    from paimon_python_spark.paimon_import import (
-        _spec_file_meta,
-        encode_binary_row,
-        plan_paimon_files,
-    )
-
     info = read_paimon_schema(table_path)
     fmt = info.options.get("file.format", "parquet")
     if fmt not in ("parquet", "orc", "avro"):
         raise NotImplementedError(f"overwrite_lake: file.format={fmt!r} not supported")
-    before = plan_paimon_files(table_path)
+    base = _lake_head(table_path)
+    before = plan_paimon_files(table_path, snapshot=base)
     part_keys = list(info.partition_keys)
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
     dyn_out: Optional[list] = None
     if info.primary_keys:
         num_buckets = int(info.options.get("bucket", "-1"))
@@ -6144,7 +6125,7 @@ def overwrite_lake(table_path: str, df) -> int:
             if c.strip()
         ] or None
         seq_base = max((e.max_seq for e in before), default=-1) + 1
-        add_entries, n_rows = _distributed_lake_write(
+        add_entries, _ = _distributed_lake_write(
             table_path,
             info,
             df,
@@ -6157,48 +6138,22 @@ def overwrite_lake(table_path: str, df) -> int:
             dyn_fresh=True,
         )
     else:
-        add_entries, n_rows = _distributed_lake_write(
+        add_entries, _ = _distributed_lake_write(
             table_path, info, df, fmt, kv=False
         )
-    delete_entries = [
-        {
-            "_VERSION": 2,
-            "_KIND": 1,
-            "_PARTITION": encode_binary_row(
-                [e.partition[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": e.bucket,
-            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-            "_FILE": _spec_file_meta(
-                e.file_name,
-                e.file_size,
-                e.row_count,
-                schema_id=e.schema_id,
-                max_seq=e.max_seq,
-                level=e.level,
-            ),
-        }
-        for e in before
-    ]
-    index_manifest = None
-    if dyn_out:
-        # the overwrite's own key→bucket assignments are the entire
-        # index now (DV entries drop with the replaced files)
-        from paimon_python_spark.dynamic_bucket import (
-            pending_to_entries,
-            write_index_manifest,
-        )
+    # the overwrite's own key→bucket assignments are the entire index
+    # now (DV entries drop with the replaced files)
+    from paimon_python_spark.dynamic_bucket import pending_to_entries
 
-        ents, _replaced = pending_to_entries(info, dyn_out)
-        index_manifest = write_index_manifest(table_path, ents)
     return _commit_lake_snapshot(
         table_path,
         info,
-        delete_entries + add_entries,
-        n_rows,
+        add_entries,
         commit_kind="OVERWRITE",
-        index_manifest=index_manifest,
-        total_record_count=n_rows,
+        deleted=before,
+        index_added=pending_to_entries(info, dyn_out or []),
+        index_retired="all",
+        base=base,
     )
 
 
@@ -6214,27 +6169,20 @@ def register_lake_sql_view(spark, table_path: str, name: str):
     return df
 
 
-def _write_dv_index_manifest(
-    table_path: str, info, marked: dict, entries, pending: Optional[list] = None
-) -> str:
-    """Write the deletion-vector index file(s) + index manifest for
-    ``marked`` ({data_file_name: sorted positions}) — one index file +
+def _write_dv_index_entries(table_path: str, info, marked: dict, entries) -> list:
+    """Write the deletion-vector index file(s) for ``marked``
+    ({data_file_name: sorted positions}) — one index file + index
     manifest entry per (partition, bucket), carrying the REAL BinaryRow
     partition (a JVM Paimon reader decodes entry partitions with the
     table's partition row type, so a single empty-partition entry would
     break interop on partitioned lakes). ``entries`` maps file names to
-    their (partition, bucket). ``pending``: dynamic-bucket index metas
-    staged by the caller's own write (a compaction rewrite / self-heal)
-    — they replace the carried-forward HASH entries of their buckets,
-    exactly like write_merged_index_manifest. Returns the manifest file
-    name."""
+    their (partition, bucket). Returns the index manifest entries; each
+    supersedes its group's DV entry at commit."""
     import os
     import uuid
 
-    from paimon_python_spark.avro_codec import write_avro_records
     from paimon_python_spark.paimon_import import (
         DELETION_VECTORS_INDEX,
-        INDEX_MANIFEST_SCHEMA,
         encode_binary_row,
         write_dv_index_file,
     )
@@ -6243,13 +6191,8 @@ def _write_dv_index_manifest(
     by_file = {e.file_name: e for e in entries}
     groups: dict = {}
     for fname in sorted(marked):
-        e = by_file.get(fname)
-        gkey = (
-            (tuple(sorted(e.partition.items())), e.bucket)
-            if e is not None
-            else ((), 0)
-        )
-        groups.setdefault(gkey, []).append(fname)
+        e = by_file[fname]
+        groups.setdefault((tuple(sorted(e.partition.items())), e.bucket), []).append(fname)
     os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
     tag = uuid.uuid4().hex[:12]
     index_entries = []
@@ -6279,36 +6222,7 @@ def _write_dv_index_manifest(
                 ],
             }
         )
-    # a dynamic-bucket lake's HASH key index is live state too — carry
-    # it forward (this manifest REPLACES the previous one), with any
-    # ``pending`` staged assignments superseding their buckets' old
-    # entries (dropping them would discard a compaction's re-route /
-    # self-heal and leave the lake's routing stale or unsound)
-    from paimon_python_spark.dynamic_bucket import pending_to_entries
-    from paimon_python_spark.paimon_import import (
-        HASH_INDEX,
-        live_index_entries,
-    )
-
-    new_hash, replaced = pending_to_entries(info, pending or [])
-    index_entries.extend(
-        r
-        for r in live_index_entries(table_path)
-        if r.get("_INDEX_TYPE") == HASH_INDEX
-        and (
-            bytes(r.get("_PARTITION") or b""),
-            int(r.get("_BUCKET") or 0),
-        )
-        not in replaced
-    )
-    index_entries.extend(new_hash)
-    im_name = f"index-manifest-{tag}.avro"
-    write_avro_records(
-        os.path.join(table_path, "manifest", im_name),
-        INDEX_MANIFEST_SCHEMA,
-        index_entries,
-    )
-    return im_name
+    return index_entries
 
 
 def update_lake_rows(
@@ -6372,29 +6286,25 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
     snapshot N+1 carries the SAME data manifests with the new index —
     no data file is rewritten, which is exactly Paimon's DV delete
     shape. Existing marks merge in (a second delete unions with the
-    first). Returns the new snapshot id.
+    first); the other groups' index entries carry forward. A
+    concurrent commit that removed a marked file (a compaction) or
+    changed a marked group's deletion vectors makes the delete raise
+    :class:`LakeCommitConflict`. Returns the new snapshot id.
 
     PK lakes instead commit the matched keys as ``-D`` kind records in
     a level-0 key-value file (the LSM delete shape every Paimon reader
     resolves); append tables take the DV path below. DV deletes are
     selective by nature; for rewrite-scale deletions use a filtered
     copy instead."""
-    import json
     import os
-    import uuid
 
     from pyspark.sql import functions as F
 
     from paimon_python_spark.paimon_import import (
         _load_lake_entries,
         _relevant_dv,
-        latest_paimon_snapshot_id,
-        plan_paimon_dv,
-        plan_paimon_files,
         read_dv_index_entry,
-        read_paimon_snapshot,
     )
-    from paimon_python_spark.avro_codec import write_avro_records
     from paimon_python_spark.session import get_spark
 
     spark = get_spark()
@@ -6427,7 +6337,8 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
                 matched.withColumn("__kind", F.lit(3)),
                 row_kind_col="__kind",
             )
-    entries = plan_paimon_files(table_path)
+    base = _lake_head(table_path)
+    entries = plan_paimon_files(table_path, snapshot=base)
     fmt = info.options.get("file.format", "parquet")
     part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
     default_name = info.options.get("partition.default-name", None)
@@ -6438,7 +6349,7 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
             table_path, e.rel_path(info.partition_keys, part_types, **kw)
         )
 
-    prev_dv = _relevant_dv(plan_paimon_dv(table_path), entries)
+    prev_dv = _relevant_dv(plan_paimon_dv(table_path, snapshot=base), entries)
     # hive-style partition columns aren't in the files; evaluate the
     # partition part of the predicate per entry and the residual on rows
     part_pred = (
@@ -6549,79 +6460,28 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
             marked[r["file_name"]] = deserialize_roaring32(bytes(r["bitmap"]))
     if not marked:
         raise ValueError("delete_lake_rows: predicate matched no rows")
-    # merge existing marks forward (per-file union, transient arrays)
+    # a touched group's new entry replaces its old one: merge the
+    # group's existing marks forward (per-file union, transient arrays)
     import numpy as _np
 
+    by_file = {e.file_name: e for e in entries}
+
+    def group(name: str) -> tuple:
+        e = by_file[name]
+        return (tuple(sorted(e.partition.items())), e.bucket)
+
+    touched = {group(n) for n in marked}
     for r in prev_dv:
-        prev_pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-        cur = marked.get(r.data_file_name)
-        marked[r.data_file_name] = (
-            _np.union1d(cur, prev_pos) if cur is not None else prev_pos
-        )
-
-    im_name = _write_dv_index_manifest(table_path, info, marked, entries)
-    tag = uuid.uuid4().hex[:12]
-    from paimon_python_spark.paimon_import import (
-        MANIFEST_LIST_SCHEMA,
-        read_manifest_list_entries,
+        if group(r.data_file_name) in touched:
+            prev_pos = read_dv_index_entry(r.index_path, r.offset, r.length)
+            cur = marked.get(r.data_file_name)
+            marked[r.data_file_name] = (
+                _np.union1d(cur, prev_pos) if cur is not None else prev_pos
+            )
+    return _commit_lake_snapshot(
+        table_path,
+        info,
+        [],
+        index_added=_write_dv_index_entries(table_path, info, marked, entries),
+        base=base,
     )
-
-    for attempt in range(20):
-        if attempt:
-            import random as _random
-            import time as _time
-
-            _time.sleep(_random.uniform(0, 0.02 * attempt))
-        sdir = os.path.join(table_path, "snapshot")
-        ids = [
-            int(n.split("-")[1]) for n in os.listdir(sdir) if n.startswith("snapshot-")
-        ]
-        prev_id = max(latest_paimon_snapshot_id(table_path), max(ids) if ids else 0)
-        prev = read_paimon_snapshot(table_path, prev_id)
-        new_id = prev_id + 1
-        # a DV-only commit changes NO data files: fold prev's manifests
-        # into the base list (ORIGINAL records — partition stats
-        # survive) and publish an EMPTY delta, so incremental consumers
-        # of (prev, new] correctly see zero new rows
-        prior: list = []
-        for lst in (prev.get("baseManifestList"), prev.get("deltaManifestList")):
-            if lst:
-                prior.extend(read_manifest_list_entries(table_path, lst))
-
-        blname = f"manifest-list-{tag}-{attempt}-base.avro"
-        dlname = f"manifest-list-{tag}-{attempt}-delta.avro"
-        write_avro_records(
-            os.path.join(table_path, "manifest", blname),
-            MANIFEST_LIST_SCHEMA,
-            prior,
-        )
-        write_avro_records(
-            os.path.join(table_path, "manifest", dlname),
-            MANIFEST_LIST_SCHEMA,
-            [],
-        )
-        snap = dict(
-            prev,
-            id=new_id,
-            baseManifestList=blname,
-            deltaManifestList=dlname,
-            indexManifest=im_name,
-            commitUser="paimon_python_spark",
-            commitIdentifier=new_id,
-            # explicit: dict(prev, ...) would inherit whatever kind the
-            # previous committer used (e.g. COMPACT / OVERWRITE)
-            commitKind="APPEND",
-            deltaRecordCount=0,
-            changelogRecordCount=0,
-            changelogManifestList=None,
-        )
-        spath = os.path.join(sdir, f"snapshot-{new_id}")
-        try:
-            fd = os.open(spath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        except FileExistsError:
-            continue
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap, f)
-        write_hint_atomic(os.path.join(sdir, "LATEST"), new_id)
-        return new_id
-    raise RuntimeError("delete_lake_rows: lost the snapshot race 20 times")

@@ -951,20 +951,24 @@ def test_cross_lookup_one_ranking_no_double_pin(tmp_path, spark):
 
 
 def test_dv_index_manifest_applies_pending_hash(tmp_path, spark):
-    """_write_dv_index_manifest (the surviving-DV compaction path) must
-    apply staged dynamic-bucket assignments, not carry the old HASH
-    entries verbatim — dropping them would discard a scoped
-    compaction's re-route / self-heal and leave the lake's routing
-    stale while the commit claims success."""
-    from paimon_python_spark.avro_codec import read_avro_records
-    from paimon_python_spark.dynamic_bucket import write_hash_index_file
+    """The committer's index fold must apply staged dynamic-bucket
+    assignments, not carry the old HASH entries verbatim — dropping
+    them would discard a scoped compaction's re-route / self-heal and
+    leave the lake's routing stale while the commit claims success.
+    Every other HASH entry and the deletion vectors carry forward."""
+    from paimon_python_spark.dynamic_bucket import (
+        pending_to_entries,
+        write_hash_index_file,
+    )
     from paimon_python_spark.paimon_import import (
         DELETION_VECTORS_INDEX,
         HASH_INDEX,
         live_index_entries,
     )
     from paimon_python_spark.paimon_lake import (
-        _write_dv_index_manifest,
+        _commit_lake_snapshot,
+        _lake_head,
+        _write_dv_index_entries,
         read_paimon_schema,
     )
 
@@ -982,6 +986,14 @@ def test_dv_index_manifest_applies_pending_hash(tmp_path, spark):
         if e.get("_INDEX_TYPE") == HASH_INDEX
     }
     assert len(before) >= 2  # target-row-num=10 → ≥3 buckets for 25 keys
+    files = plan_paimon_files(tp)
+    _commit_lake_snapshot(
+        tp,
+        info,
+        [],
+        index_added=_write_dv_index_entries(tp, info, {files[0].file_name: [0]}, files),
+        base=_lake_head(tp),
+    )
     # stage a replacement for bucket 0 (a compact rewrite's meta)
     os.makedirs(os.path.join(tp, "index"), exist_ok=True)
     size = write_hash_index_file(
@@ -997,12 +1009,14 @@ def test_dv_index_manifest_applies_pending_hash(tmp_path, spark):
             "rows": 3,
         }
     ]
-    files = plan_paimon_files(tp)
-    im = _write_dv_index_manifest(
-        tp, info, {files[0].file_name: [0]}, files, pending=pending
+    _commit_lake_snapshot(
+        tp,
+        info,
+        [],
+        index_added=pending_to_entries(info, pending),
+        base=_lake_head(tp),
     )
-    with open(os.path.join(tp, "manifest", im), "rb") as f:
-        _, entries = read_avro_records(f.read())
+    entries = live_index_entries(tp)
     hash_by_bucket = {
         int(e["_BUCKET"]): e["_FILE_NAME"]
         for e in entries
