@@ -1,4 +1,7 @@
-"""Aggregation merge-engine field functions — full Paimon parity.
+"""Merge-engine functions — full Paimon parity — and the ONE in-task
+primary-key merge (:func:`merge_pk_group`) every per-group reader
+calls: the lake and engine read builders' no-shuffle paths and both
+``format(...)`` data sources.
 
 Paimon's aggregation merge engine resolves each value column with a
 per-field aggregate declared via ``fields.<name>.aggregate-function``
@@ -457,7 +460,7 @@ def field_agg_plan(schema, value_cols, seq_col, kind_col):
     return aggs, post
 
 
-def hll_sketch_fields(schema, value_cols) -> list:
+def hll_sketch_fields(options, value_cols) -> list:
     """Value columns declared ``fields.<c>.aggregate-function =
     hll_sketch`` — the ONE function the in-task pandas fold cannot
     express (the union is Spark's JVM ``hll_union_agg``; this engine
@@ -467,7 +470,7 @@ def hll_sketch_fields(schema, value_cols) -> list:
     return [
         c
         for c in value_cols
-        if schema.options.get(f"fields.{c}.aggregate-function") == "hll_sketch"
+        if options.get(f"fields.{c}.aggregate-function") == "hll_sketch"
     ]
 
 
@@ -506,7 +509,7 @@ def _as_map_items(v) -> list:
 
 
 def pandas_agg_merge(
-    pdf: pd.DataFrame, schema, merge_keys, value_cols, seq_col, kind_col
+    pdf: pd.DataFrame, opts, merge_keys, value_cols, seq_col, kind_col
 ) -> pd.DataFrame:
     """In-task pandas twin of :func:`field_agg_plan` — the aggregation
     merge engine for the ``format(...)`` data sources, where one task
@@ -523,8 +526,7 @@ def pandas_agg_merge(
     fields are refused at plan time (:func:`hll_sketch_fields`)."""
     import numpy as np
 
-    opts = schema.options
-    bad = hll_sketch_fields(schema, value_cols)
+    bad = hll_sketch_fields(opts, value_cols)
     if bad:
         raise ValueError(
             f"hll_sketch fields {bad} cannot merge in-task; "
@@ -836,7 +838,7 @@ def _pandas_scalar_agg(
 
 
 def pandas_partial_update_merge(
-    pdf: pd.DataFrame, schema, merge_keys, value_cols, seq_col, kind_col
+    pdf: pd.DataFrame, opts, merge_keys, value_cols, seq_col, kind_col
 ) -> pd.DataFrame:
     """In-task pandas twin of the builder's FULL partial-update merge
     (read.py merge_on_read): sequence groups (``fields.<g>.
@@ -848,7 +850,6 @@ def pandas_partial_update_merge(
     (front-door read vs builder read) and the shared SQL oracles.
     The caller applies ignore-delete BEFORE this fold, exactly like
     merge_on_read."""
-    opts = schema.options
     groups: dict = {}
     for opt, val in opts.items():
         if opt.startswith("fields.") and opt.endswith(".sequence-group"):
@@ -989,3 +990,83 @@ def pandas_partial_update_merge(
         ).to_numpy()
     ].reset_index(drop=True)
     return out[merge_keys + list(value_cols)]
+
+
+def merge_pk_group(
+    pdf: pd.DataFrame, merge_keys, order_cols, kind_col, value_cols, options
+) -> pd.DataFrame:
+    """The in-task primary-key merge of one merge-closed group (one
+    (partition, bucket) holding every version of its keys) — Paimon's
+    SortMergeReader with its pluggable merge function
+    (sort_merge_reader.py:78-108), shared by every in-task reader.
+
+    ``order_cols`` is the ONE ascending merge order, NULLS FIRST
+    (Spark's ascending order); a later row is a newer version. A
+    caller wanting a descending tie-break passes a negated column.
+    ``ignore-delete`` drops retracts first, then the ``merge-engine``
+    decides: ``deduplicate`` keeps each key's last row, ``first-row``
+    its first, and both drop ``-U``/``-D`` survivors;
+    ``partial-update`` and ``aggregation`` fold in merge order.
+    Returns ``merge_keys + value_cols`` of the visible rows, in key
+    order."""
+    engine = options.get("merge-engine", "deduplicate")
+    if options.get("ignore-delete", "false").lower() == "true":
+        pdf = pdf[pdf[kind_col].isin(ADD_KINDS)]
+    pdf = pdf.sort_values(
+        [*merge_keys, *order_cols], kind="mergesort", na_position="first"
+    ).reset_index(drop=True)
+    if engine in ("partial-update", "aggregation"):
+        fold = (
+            pandas_partial_update_merge
+            if engine == "partial-update"
+            else pandas_agg_merge
+        )
+        pdf["__ord"] = range(len(pdf))
+        return fold(pdf, options, merge_keys, value_cols, "__ord", kind_col)
+    if engine not in ("deduplicate", "first-row"):
+        raise ValueError(f"unknown merge-engine {engine!r}")
+    pdf = pdf.drop_duplicates(
+        subset=merge_keys, keep="first" if engine == "first-row" else "last"
+    )
+    return pdf.loc[pdf[kind_col].isin(ADD_KINDS), [*merge_keys, *value_cols]]
+
+
+def key_arrow_filter(key_predicate):
+    """A key predicate as a pyarrow filter for the in-task reads, or
+    None. Filtering a group's rows on KEY columns before the merge is
+    exact (every version of a key shares them); a method pyarrow
+    cannot express reads unfiltered."""
+    if key_predicate is None:
+        return None
+    try:
+        return key_predicate.to_arrow()
+    except ValueError:
+        return None
+
+
+def read_group_file(path: str, fmt: str, cols, arrow_filter=None):
+    """The columns of ``cols`` one data file has, as an Arrow table.
+    ``arrow_filter`` (parquet only) skips row groups whose stats rule
+    it out and drops non-matching rows; callers pass None for a file
+    whose row positions still matter (deletion vectors)."""
+    if fmt == "orc":
+        import pyarrow.orc as po
+
+        f = po.ORCFile(path)
+        return f.read(columns=[c for c in cols if c in f.schema.names])
+    if fmt == "avro":
+        import pyarrow as pa
+
+        from paimon_python_spark.avro_codec import read_avro_table
+
+        with open(path, "rb") as fh:
+            names, rows = read_avro_table(fh.read())
+        idx = {c: names.index(c) for c in cols if c in names}
+        return pa.table({c: [r[i] for r in rows] for c, i in idx.items()})
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    have = [c for c in cols if c in pf.schema_arrow.names]
+    if arrow_filter is None:
+        return pf.read(columns=have)
+    return pq.read_table(path, columns=have, filters=arrow_filter)

@@ -303,7 +303,7 @@ def _check_ds_merge_supported(schema, fmt: str) -> None:
         value_cols = [
             f.name for f in schema.spark_schema.fields if f.name not in keys
         ]
-        bad = hll_sketch_fields(schema, value_cols)
+        bad = hll_sketch_fields(schema.options, value_cols)
         if bad:
             raise RuntimeError(
                 f"{fmt}: merge-engine=aggregation with hll_sketch "
@@ -397,11 +397,12 @@ class PaimonBatchReader(DataSourceReader):
         ] or [_SplitPartition([], fmt, predicate)]
 
     def read(self, partition: _SplitPartition) -> Iterator:
+        import pandas as pd
         import pyarrow as pa
         import pyarrow.dataset as ds
 
         from paimon_python_spark.types import spark_schema_to_pa
-        from paimon_python_spark.write import ADD_KINDS, KIND_COL, SEQ_COL
+        from paimon_python_spark.write import KIND_COL, SEQ_COL
 
         schema = self.table_schema
         if not partition.paths:
@@ -456,10 +457,16 @@ class PaimonBatchReader(DataSourceReader):
                 partition.paths, format=partition.fmt, schema=physical
             ).to_table(filter=residual)
 
+        if not (is_pk or self._audit):
+            yield from tbl.to_batches(max_chunksize=4096)
+            return
+        # ArrowDtype keeps NULL-bearing BIGINT columns exact (a plain
+        # to_pandas() turns them into float64 and corrupts > 2^53)
+        pdf = tbl.to_pandas(types_mapper=pd.ArrowDtype)
+        names = [f.name for f in schema.spark_schema.fields]
         if self._audit:
             # $audit_log: every STORED row, merge-free, rowkind first
             # (+I for append tables; PK rows decode KIND_COL)
-            pdf = tbl.to_pandas()
             if is_pk:
                 pdf["rowkind"] = (
                     pdf[KIND_COL]
@@ -468,95 +475,39 @@ class PaimonBatchReader(DataSourceReader):
                 )
             else:
                 pdf["rowkind"] = "+I"
-            out_pa = pa.schema(
+            names = ["rowkind"] + names
+            logical_pa = pa.schema(
                 [pa.field("rowkind", pa.string())] + list(logical_pa)
             )
-            tbl = pa.Table.from_pandas(
-                pdf[["rowkind"] + [f.name for f in schema.spark_schema.fields]],
-                schema=out_pa,
-                preserve_index=False,
-            )
-            yield from tbl.to_batches(max_chunksize=4096)
-            return
-
-        if is_pk:
+        else:
             # executor-local merge: this partition IS one (partition,
-            # bucket) — all runs for these keys are in hand. Engine
-            # dispatch mirrors merge_on_read for the in-task-expressible
-            # engines (anything else was refused at plan time by
-            # _check_ds_merge_supported); a declared sequence.field
-            # (possibly multi-field) orders before the arrival sequence.
-            pdf = tbl.to_pandas()
+            # bucket) — all runs for these keys are in hand (engines the
+            # in-task merge cannot express were refused at plan time by
+            # _check_ds_merge_supported). A declared sequence.field
+            # (possibly multi-field) orders before the arrival sequence;
+            # __pos (file order, then in-file position) breaks ties.
+            from paimon_python_spark.agg_merge import merge_pk_group
+
             keys = list(
                 dict.fromkeys(schema.partition_keys + schema.primary_keys)
             )
-            opts = schema.options
-            engine = opts.get("merge-engine", "deduplicate")
             seq_fields = [
                 c.strip()
-                for c in opts.get("sequence.field", "").split(",")
+                for c in schema.options.get("sequence.field", "").split(",")
                 if c.strip()
             ]
-            order_cols = seq_fields + [SEQ_COL]
-            if opts.get("ignore-delete", "false").lower() == "true":
-                # drops retracts BEFORE the merge: a -D must not shadow
-                # the standing row (read.py's pre-merge filter)
-                pdf = pdf[pdf[KIND_COL].isin(ADD_KINDS)]
-            if engine == "first-row":
-                pdf = pdf.sort_values(
-                    order_cols,
-                    ascending=True,
-                    na_position="first",  # Spark asc = NULLS FIRST
-                    kind="mergesort",
-                ).drop_duplicates(subset=keys, keep="first")
-                pdf = pdf[pdf[KIND_COL].isin(ADD_KINDS)]
-            elif engine == "partial-update":
-                # full partial-update surface in-task (r12): sequence
-                # groups, per-field scalar aggregates,
-                # remove-record-on-delete — the builder's semantics via
-                # the shared pandas twin. A declared sequence.field
-                # orders through a composite rank, arrival as tie-break.
-                from paimon_python_spark.agg_merge import (
-                    pandas_partial_update_merge,
-                    _rank_series,
-                )
-
-                value_cols = [
-                    f.name
-                    for f in schema.spark_schema.fields
-                    if f.name not in keys
-                ]
-                pdf = pdf.reset_index(drop=True)
-                pdf["__ord"] = _rank_series(pdf, order_cols)
-                pdf = pandas_partial_update_merge(
-                    pdf, schema, keys, value_cols, "__ord", KIND_COL
-                )
-            elif engine == "aggregation":
-                # executor-local twin of the builder's one-hash-
-                # aggregate fold (hll_sketch refused at plan time)
-                from paimon_python_spark.agg_merge import pandas_agg_merge
-
-                value_cols = [
-                    f.name
-                    for f in schema.spark_schema.fields
-                    if f.name not in keys
-                ]
-                pdf = pandas_agg_merge(
-                    pdf, schema, keys, value_cols, SEQ_COL, KIND_COL
-                )
-            else:  # deduplicate
-                pdf = pdf.sort_values(
-                    order_cols,
-                    ascending=False,
-                    na_position="last",  # Spark desc = NULLS LAST
-                    kind="mergesort",
-                ).drop_duplicates(subset=keys, keep="first")
-                pdf = pdf[pdf[KIND_COL].isin(ADD_KINDS)]
-            tbl = pa.Table.from_pandas(
-                pdf[[f.name for f in schema.spark_schema.fields]],
-                schema=logical_pa,
-                preserve_index=False,
+            pdf["__pos"] = range(len(pdf))
+            pdf = merge_pk_group(
+                pdf,
+                keys,
+                [*seq_fields, SEQ_COL, "__pos"],
+                KIND_COL,
+                [n for n in names if n not in keys],
+                schema.options,
             )
+        tbl = pa.Table.from_pandas(
+            pdf[names], schema=logical_pa, preserve_index=False
+        )
         yield from tbl.to_batches(max_chunksize=4096)
 
 

@@ -5,9 +5,10 @@ front door onto a Flink/Spark-JVM-written (or engine-written) lake,
 on the same driver-side planner every lake read uses.
 
 - batch: one ``InputPartition`` per (partition, bucket) group for PK
-  lakes (the merge unit — the executor-local merge needs no shuffle,
-  same shape as ``merge_pk_entries_bucket_local``) and one per file
-  for append lakes; pushed filters re-enter the engine predicate tree
+  lakes (the merge unit, needing no shuffle; planned, read and merged
+  by the same ``paimon_import.plan_lake_groups`` / ``merge_lake_group``
+  as the lake read builder's no-shuffle path) and one per file for
+  append lakes; pushed filters re-enter the engine predicate tree
   so partition pruning, manifest-stats skipping, bloom probes, and PK
   bucket pruning all fire before partitions exist.
 - streaming: snapshot-id offsets; each micro-batch plans one
@@ -65,26 +66,6 @@ class _LakeGroupPartition(InputPartition):
     def __init__(self, spec: str, predicate=None):
         self.spec = spec
         self.predicate = predicate  # engine Predicate, pickled with the partition
-
-
-def _json_safe_part(info, partition: dict) -> dict:
-    from paimon_python_spark.paimon_import import logical_partition_values
-
-    out = {}
-    for k, v in logical_partition_values(info, partition).items():
-        out[k] = v.isoformat() if hasattr(v, "isoformat") else v
-    return out
-
-
-def _part_value(info, name, v):
-    import datetime
-
-    dt = info.spark_schema[name].dataType
-    if v is not None and isinstance(dt, T.DateType):
-        if isinstance(v, int):
-            return datetime.date(1970, 1, 1) + datetime.timedelta(days=v)
-        return datetime.date.fromisoformat(v)
-    return v
 
 
 class PaimonLakeBatchReader(DataSourceReader):
@@ -145,7 +126,12 @@ class PaimonLakeBatchReader(DataSourceReader):
         return field_id_colmap(self.table_path, self.info, schema_id)
 
     def partitions(self):
-        from paimon_python_spark.paimon_import import plan_paimon_dv
+        from paimon_python_spark.paimon_import import (
+            bucket_local_budget,
+            max_group_bytes,
+            plan_lake_groups,
+            plan_paimon_dv,
+        )
         from paimon_python_spark.paimon_lake import (
             PaimonLakeTable,
             _pruned_entries,
@@ -193,19 +179,8 @@ class PaimonLakeBatchReader(DataSourceReader):
             )
 
         fmt = info.options.get("file.format", "parquet")
-        parts: List[_LakeGroupPartition] = []
         if info.primary_keys:
-            from paimon_python_spark.paimon_import import (
-                _BUCKET_LOCAL_MAX_GROUP_BYTES,
-                max_group_bytes,
-            )
-
-            budget = int(
-                info.options.get(
-                    "bucket-local.max-group-bytes",
-                    _BUCKET_LOCAL_MAX_GROUP_BYTES,
-                )
-            )
+            budget = bucket_local_budget(info.options)
             if max_group_bytes(entries) > budget:
                 # one (partition, bucket) group would merge in a single
                 # task's memory — same scale guard as the builder path,
@@ -218,57 +193,10 @@ class PaimonLakeBatchReader(DataSourceReader):
                     "read via PaimonLakeTable(path).new_read_builder() "
                     "(exact key-window merge, spills instead of OOMing)"
                 )
-            groups: dict = {}
-            for i, e in enumerate(entries):
-                key = (tuple(sorted(e.partition.items())), e.bucket)
-                groups.setdefault(key, []).append((i, e))
-            for (_, _b), es in sorted(groups.items()):
-                parts.append(
-                    _LakeGroupPartition(
-                        json.dumps(
-                            {
-                                "kv": True,
-                                "fmt": fmt,
-                                "files": [
-                                    [
-                                        i,
-                                        src(e),
-                                        e.level,
-                                        self._colmap(e.schema_id),
-                                        dv_by_file.get(e.file_name),
-                                    ]
-                                    for i, e in es
-                                ],
-                                "partition": _json_safe_part(info, es[0][1].partition),
-                            }
-                        ),
-                        predicate,
-                    )
-                )
-        else:
-            for e in entries:
-                parts.append(
-                    _LakeGroupPartition(
-                        json.dumps(
-                            {
-                                "kv": False,
-                                "fmt": fmt,
-                                "files": [
-                                    [
-                                        0,
-                                        src(e),
-                                        e.level,
-                                        self._colmap(e.schema_id),
-                                        dv_by_file.get(e.file_name),
-                                    ]
-                                ],
-                                "partition": _json_safe_part(info, e.partition),
-                            }
-                        ),
-                        predicate,
-                    )
-                )
-        return parts or [
+        specs = plan_lake_groups(
+            info, entries, src, fmt, colmap=self._colmap, dv_by_file=dv_by_file
+        )
+        return [_LakeGroupPartition(s, predicate) for s in specs] or [
             _LakeGroupPartition(
                 json.dumps(
                     {"kv": False, "fmt": fmt, "files": [], "partition": {}}
@@ -276,232 +204,47 @@ class PaimonLakeBatchReader(DataSourceReader):
             )
         ]
 
-    def _read_file(self, path: str, fmt: str, cols):
-        if fmt == "orc":
-            import pyarrow.orc as po
-
-            f = po.ORCFile(path)
-            have = [c for c in cols if c in f.schema.names]
-            return f.read(columns=have)
-        if fmt == "avro":
-            import pyarrow as pa
-
-            from paimon_python_spark.avro_codec import read_avro_table
-
-            with open(path, "rb") as fh:
-                names, rows = read_avro_table(fh.read())
-            keep = [c for c in cols if c in names]
-            idx = {c: names.index(c) for c in keep}
-            return pa.table({c: [r[idx[c]] for r in rows] for c in keep})
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(path)
-        have = [c for c in cols if c in pf.schema_arrow.names]
-        return pf.read(columns=have)
-
-    def _filler_pa_type(self, info, col: str):
-        """Arrow type for a NULL-filled column (dropped field id in a
-        pre-evolution file): value/key columns follow the current table
-        schema; the two sequence system columns are fixed by the writer
-        (paimon_lake._write_kv_files: int64 / int32)."""
-        import pyarrow as pa
-
-        from paimon_python_spark.types import spark_type_to_pa
-
-        if col == "_SEQUENCE_NUMBER":
-            return pa.int64()
-        if col == "_VALUE_KIND":
-            return pa.int32()
-        base = col[5:] if col.startswith("_KEY_") else col
-        for f in info.spark_schema.fields:
-            if f.name == base:
-                return spark_type_to_pa(f.dataType)
-        return pa.null()
-
     def read(self, partition: _LakeGroupPartition) -> Iterator:
-        import pandas as pd
         import pyarrow as pa
 
+        from paimon_python_spark.paimon_import import (
+            lake_group_output,
+            merge_lake_group,
+            read_lake_group,
+        )
         from paimon_python_spark.types import spark_schema_to_pa
 
         info = self.info
         spec = json.loads(partition.spec)
         if not spec["files"]:
             return
-        part_keys = list(info.partition_keys)
-        trimmed = [k for k in info.primary_keys if k not in part_keys]
-        value_names = [
-            f.name for f in info.spark_schema.fields if f.name not in part_keys
-        ]
-        key_cols = [f"_KEY_{k}" for k in trimmed]
-        sys_cols = (
-            key_cols + ["_SEQUENCE_NUMBER", "_VALUE_KIND"] if spec["kv"] else []
-        )
-        cols = sys_cols + value_names
-        frames = []
-        for idx, path, level, colmap, dv in spec["files"]:
-            # field-id schema evolution: read a pre-evolution file by
-            # its OWN column names, then rename to the current schema
-            # (renamed columns follow their field id; dropped ids
-            # NULL-fill) — the pyarrow twin of _mapped_select
-            if colmap:
-                src_cols = sys_cols + [
-                    colmap[c] for c in value_names if colmap.get(c)
-                ]
-            else:
-                src_cols = cols
-            f = self._read_file(path, spec["fmt"], src_cols).to_pandas(
-                types_mapper=pd.ArrowDtype
-            )
-            if dv:
-                # deletion vector: drop this file's marked row positions
-                # BEFORE the merge (builder-path contract; the merge
-                # after the drop stays exact — DV marks superseded rows)
-                import numpy as np
-
-                from paimon_python_spark.paimon_import import (
-                    read_dv_index_entry,
-                )
-
-                pos = read_dv_index_entry(str(dv[0]), int(dv[1]), int(dv[2]))
-                keep = np.setdiff1d(
-                    np.arange(len(f), dtype=np.int64), pos.astype(np.int64)
-                )
-                f = f.iloc[keep].reset_index(drop=True)
-            if colmap:
-                f = f.rename(
-                    columns={
-                        colmap[c]: c
-                        for c in value_names
-                        if colmap.get(c) and colmap[c] != c
-                    }
-                )
-            for c in cols:
-                if c not in f.columns:
-                    # dtype-explicit filler: an object all-NA column would
-                    # make pd.concat's result dtype depend on pandas
-                    # version (FutureWarning today, dtype shift tomorrow)
-                    f[c] = pd.Series(
-                        pd.NA,
-                        index=f.index,
-                        dtype=pd.ArrowDtype(self._filler_pa_type(info, c)),
-                    )
-            f["__lvl"] = level
-            f["__idx"] = idx
-            frames.append(f)
-        g = pd.concat(frames, ignore_index=True)
-        if self._audit and spec["kv"]:
+        fields = list(info.spark_schema.fields)
+        value_names = [f.name for f in fields if f.name not in info.partition_keys]
+        if spec["kv"] and not self._audit:
+            # PK lake: the shared in-task merge (engine dispatch in
+            # agg_merge.merge_pk_group; others refused at plan time).
+            # Lake writers bake a declared sequence.field into
+            # _SEQUENCE_NUMBER, so the merge order carries it already.
+            g = merge_lake_group(info, spec, value_names)
+        else:
+            g = read_lake_group(info, spec, value_names)
+        out = lake_group_output(info, spec, g, fields)
+        if self._audit:
             # $audit_log: merge-free, rowkind decoded from _VALUE_KIND
-            g["__rowkind"] = (
+            out.insert(
+                0,
+                "rowkind",
                 g["_VALUE_KIND"]
                 .astype("int64")
                 .map({0: "+I", 1: "-U", 2: "+U", 3: "-D"})
+                .astype(object)
+                if spec["kv"]
+                else "+I",
             )
-        elif spec["kv"]:
-            # merge-engine dispatch for the in-task-expressible engines
-            # (others refused at plan time). Lake writers bake a declared
-            # sequence.field into _SEQUENCE_NUMBER, so the sequence sort
-            # already carries event-time order here.
-            engine = info.options.get("merge-engine", "deduplicate")
-            if info.options.get("ignore-delete", "false").lower() == "true":
-                # retracts drop BEFORE the merge — a -D must not shadow
-                # the standing row (merge_on_read's pre-merge filter)
-                g = g[g["_VALUE_KIND"].isin((0, 2))]
-            if engine == "first-row":
-                g = g.sort_values(
-                    key_cols + ["_SEQUENCE_NUMBER", "__lvl", "__idx"],
-                    ascending=[True] * len(key_cols) + [True, False, True],
-                    kind="mergesort",
-                )
-                g = g.drop_duplicates(subset=key_cols, keep="first")
-                g = g[g["_VALUE_KIND"].isin((0, 2))]
-            elif engine == "partial-update":
-                # full partial-update surface in-task (r12): sequence
-                # groups, per-field scalar aggregates,
-                # remove-record-on-delete — the builder's semantics via
-                # the shared pandas twin (lake seqs unique per row;
-                # (lvl desc, idx asc) breaks foreign-lake collisions)
-                from paimon_python_spark.agg_merge import (
-                    pandas_partial_update_merge,
-                )
-
-                g = g.sort_values(
-                    ["_SEQUENCE_NUMBER", "__lvl", "__idx"],
-                    ascending=[True, False, True],
-                    kind="mergesort",
-                ).reset_index(drop=True)
-                g["__ord"] = range(len(g))
-                value_names_only = [
-                    f.name
-                    for f in info.spark_schema.fields
-                    if f.name not in part_keys and f.name not in key_cols
-                ]
-                g = pandas_partial_update_merge(
-                    g,
-                    info,
-                    key_cols,
-                    value_names_only,
-                    "__ord",
-                    "_VALUE_KIND",
-                )
-            elif engine == "aggregation":
-                # executor-local twin of the builder's one-hash-
-                # aggregate fold (agg_merge.pandas_agg_merge; hll_sketch
-                # fields refused at plan time). Lake seqs are unique per
-                # stored row; (lvl desc, idx asc) breaks any foreign-
-                # lake collision the same way the dedup sort does.
-                from paimon_python_spark.agg_merge import pandas_agg_merge
-
-                g = g.sort_values(
-                    ["_SEQUENCE_NUMBER", "__lvl", "__idx"],
-                    ascending=[True, False, True],
-                    kind="mergesort",
-                ).reset_index(drop=True)
-                g["__ord"] = range(len(g))
-                value_names_only = [
-                    f.name
-                    for f in info.spark_schema.fields
-                    if f.name not in part_keys and f.name not in key_cols
-                ]
-                g = pandas_agg_merge(
-                    g,
-                    info,
-                    key_cols,
-                    value_names_only,
-                    "__ord",
-                    "_VALUE_KIND",
-                )
-            else:  # deduplicate
-                g = g.sort_values(
-                    key_cols + ["_SEQUENCE_NUMBER", "__lvl", "__idx"],
-                    ascending=[True] * len(key_cols) + [False, True, False],
-                    kind="mergesort",
-                )
-                g = g.drop_duplicates(subset=key_cols, keep="first")
-                g = g[g["_VALUE_KIND"].isin((0, 2))]
-        out = pd.DataFrame(index=g.index)
-        if self._audit:
-            out["rowkind"] = (
-                g["__rowkind"].astype(object)
-                if "__rowkind" in g.columns
-                else pd.Series(["+I"] * len(g), index=g.index, dtype=object)
-            )
-        for f in info.spark_schema.fields:
-            if f.name in part_keys:
-                v = _part_value(info, f.name, spec["partition"].get(f.name))
-                out[f.name] = pd.Series([v] * len(g), index=g.index, dtype=object)
-            else:
-                col = g[f.name]
-                out[f.name] = col.astype(object).where(col.notna(), None)
-        out_schema = info.spark_schema
-        if self._audit:
-            out_schema = T.StructType(
-                [T.StructField("rowkind", T.StringType(), False)]
-                + list(info.spark_schema.fields)
-            )
+            fields = [T.StructField("rowkind", T.StringType(), False)] + fields
         tbl = pa.Table.from_pandas(
             out,
-            schema=spark_schema_to_pa(out_schema),
+            schema=spark_schema_to_pa(T.StructType(fields)),
             preserve_index=False,
         )
         if partition.predicate is not None and not spec["kv"]:
@@ -725,6 +468,7 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         from paimon_python_spark.paimon_import import (
+            _json_safe_part,
             plan_paimon_changelog,
             plan_paimon_delta,
             plan_paimon_files,
@@ -846,6 +590,8 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: _LakeGroupPartition):
+        from paimon_python_spark.paimon_import import _part_value
+
         spec = json.loads(partition.spec)
         if spec.get("bootstrap_full"):
             # latest-full PK bootstrap group: the batch reader's

@@ -2340,27 +2340,55 @@ def _load_lake_entries(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-#: value dtypes the bucket-local merge keeps exact through the
-#: arrow→pandas→arrow roundtrip (others fall back to the window path)
+#: value dtypes the in-task PK merges (lake and engine) keep exact
+#: through the arrow→pandas→arrow roundtrip (others take the
+#: key-window path)
 _BUCKET_LOCAL_TYPES = (
     T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.BooleanType,
     T.FloatType, T.DoubleType, T.StringType, T.DateType,
 )
 
-#: default per-(partition, bucket) on-disk byte budget for the
-#: bucket-local merge. The merge materializes one whole group in a
-#: single task's pandas memory, so a misconfigured lake (bucket=1, or
-#: a skewed bucket key) must NOT take this path: above the budget the
-#: caller falls back to the exact key-window merge, whose shuffle
-#: spills instead of OOMing. 1 GiB on disk ≈ a few GiB decoded —
-#: comfortably inside one executor task at default sizing. Override
-#: per table with option ``bucket-local.max-group-bytes``.
+#: default per-(partition, bucket) on-disk byte budget for the in-task
+#: merge. The merge materializes one whole group in a single task's
+#: pandas memory, so a misconfigured table (bucket=1, or a skewed
+#: bucket key) must NOT take this path: above the budget the builders
+#: fall back to the exact key-window merge, whose shuffle spills
+#: instead of OOMing. 1 GiB on disk ≈ a few GiB decoded — comfortably
+#: inside one executor task at default sizing. Override per table with
+#: option ``bucket-local.max-group-bytes``.
 _BUCKET_LOCAL_MAX_GROUP_BYTES = 1 << 30
+
+
+def bucket_local_budget(options) -> int:
+    """The table's per-group byte budget for the in-task merge."""
+    return int(
+        options.get("bucket-local.max-group-bytes", _BUCKET_LOCAL_MAX_GROUP_BYTES)
+    )
+
+
+def bucket_local_merge_ok(options, spark_schema, fmt: str, largest_group: int) -> bool:
+    """The eligibility both read builders share for the NO-SHUFFLE
+    in-task merge: parquet/orc files, plain deduplicate engine without
+    sequence.field, value dtypes the pandas roundtrip keeps exact, and
+    — the scale guard — no group larger than the budget on disk (a
+    whole group merges in ONE task's memory; an oversized group falls
+    back to the exact key-window path, which shuffles but spills
+    instead of OOMing). Format-specific checks stay with the caller."""
+    return (
+        fmt in ("parquet", "orc")
+        and options.get("merge-engine", "deduplicate") == "deduplicate"
+        and not options.get("sequence.field")
+        and largest_group <= bucket_local_budget(options)
+        and all(
+            isinstance(f.dataType, _BUCKET_LOCAL_TYPES)
+            for f in spark_schema.fields
+        )
+    )
 
 
 def max_group_bytes(entries) -> int:
     """Largest per-(partition, bucket) sum of on-disk file sizes —
-    the single-task memory proxy the bucket-local merge is gated on."""
+    the single-task memory proxy the in-task merge is gated on."""
     sizes: dict = {}
     for e in entries:
         key = (tuple(sorted(e.partition.items())), e.bucket)
@@ -2369,20 +2397,13 @@ def max_group_bytes(entries) -> int:
 
 
 def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries, fmt: str, dv_ranges) -> bool:
-    """Eligibility for the NO-SHUFFLE bucket-local PK merge: fixed
-    bucket geometry consistent across entries, single schema version
-    (no field-id remap needed in the task), parquet files, deduplicate
-    engine without sequence.field, no deletion vectors, value dtypes
-    the pandas roundtrip keeps exact, and — the scale guard — no
-    (partition, bucket) group larger than ``bucket-local.max-group-bytes``
-    on disk (a whole group merges in ONE task's memory; an oversized
-    group falls back to the exact key-window path, which shuffles but
-    spills instead of OOMing)."""
-    if fmt not in ("parquet", "orc") or dv_ranges:
-        return False
-    if info.options.get("merge-engine", "deduplicate") != "deduplicate":
-        return False
-    if info.options.get("sequence.field"):
+    """Lake eligibility for the in-task merge: the shared gate plus
+    fixed bucket geometry consistent across entries, a single schema
+    version (no field-id remap), no deletion vectors, and no
+    cross-partition PK."""
+    if dv_ranges or not bucket_local_merge_ok(
+        info.options, info.spark_schema, fmt, max_group_bytes(entries)
+    ):
         return False
     nb = int(info.options.get("bucket", "-1"))
     if nb < 1:
@@ -2396,19 +2417,180 @@ def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries, fmt: str, dv_ranges)
             return False
     if any(e.schema_id != info.id for e in entries):
         return False
-    if any(e.total_buckets not in (None, nb) for e in entries):
-        return False  # mixed geometry (pre-rescale history): stay exact
-    budget = int(
-        info.options.get(
-            "bucket-local.max-group-bytes", _BUCKET_LOCAL_MAX_GROUP_BYTES
+    # mixed geometry (pre-rescale history): stay exact
+    return all(e.total_buckets in (None, nb) for e in entries)
+
+
+def _json_safe_part(info, partition: dict) -> dict:
+    """Partition values for a JSON group spec (dates as ISO strings)."""
+    out = {}
+    for k, v in logical_partition_values(info, partition).items():
+        out[k] = v.isoformat() if hasattr(v, "isoformat") else v
+    return out
+
+
+def _part_value(info, name, v):
+    """A group spec's partition value back to its logical Python value."""
+    import datetime
+
+    if v is not None and isinstance(info.spark_schema[name].dataType, T.DateType):
+        return datetime.date.fromisoformat(v)
+    return v
+
+
+#: the lake's ascending merge order inside a group: sequence number,
+#: then level DESCENDING (level 0 holds the newest runs), then manifest
+#: entry order (a later commit wins)
+LAKE_MERGE_ORDER = ["_SEQUENCE_NUMBER", "__neg_lvl", "__idx"]
+
+
+def plan_lake_groups(info, entries, src, fmt, colmap=None, dv_by_file=None):
+    """JSON specs of a lake read's in-task units: one per (partition,
+    bucket) group of a PK lake — the merge unit, closed because a key
+    lives in exactly one group — and one per file of an append lake.
+    Each spec lists its files as ``[entry index, path, level, field-id
+    colmap, DV (index, offset, length) or None]`` plus the group's
+    JSON-safe partition values. ``colmap`` maps a schema id to its
+    column map; ``dv_by_file`` maps a data file name to its DV triple."""
+    kv = bool(info.primary_keys)
+    dv_by_file = dv_by_file or {}
+    groups: dict = {}
+    for i, e in enumerate(entries):
+        key = (tuple(sorted(e.partition.items())), e.bucket) if kv else i
+        groups.setdefault(key, []).append((i, e))
+    return [
+        json.dumps(
+            {
+                "kv": kv,
+                "fmt": fmt,
+                "files": [
+                    [
+                        i,
+                        src(e),
+                        e.level,
+                        colmap(e.schema_id) if colmap else None,
+                        dv_by_file.get(e.file_name),
+                    ]
+                    for i, e in es
+                ],
+                "partition": _json_safe_part(info, es[0][1].partition),
+            }
         )
+        for _, es in sorted(groups.items())
+    ]
+
+
+def _filler_pa_type(info, col: str):
+    """Arrow type for a NULL-filled column (dropped field id in a
+    pre-evolution file): value/key columns follow the current table
+    schema; the two sequence system columns are fixed by the writer
+    (paimon_lake._write_kv_files: int64 / int32)."""
+    import pyarrow as pa
+
+    from paimon_python_spark.types import spark_type_to_pa
+
+    if col == "_SEQUENCE_NUMBER":
+        return pa.int64()
+    if col == "_VALUE_KIND":
+        return pa.int32()
+    base = col[5:] if col.startswith("_KEY_") else col
+    for f in info.spark_schema.fields:
+        if f.name == base:
+            return spark_type_to_pa(f.dataType)
+    return pa.null()
+
+
+def _lake_key_cols(info) -> list:
+    return [f"_KEY_{k}" for k in info.primary_keys if k not in info.partition_keys]
+
+
+def read_lake_group(info, spec: dict, value_names, arrow_filter=None):
+    """One planned group's stored rows as an ArrowDtype frame (NULL
+    ints and longs above 2^53 stay exact): the kv system columns when
+    ``spec["kv"]``, ``value_names``, and the merge-order tie-breaks
+    ``__neg_lvl``/``__idx``. Each file reads by its OWN column names
+    (field-id colmap), drops its DV-marked positions, renames to the
+    current schema and NULL-fills missing columns with typed fillers.
+    ``arrow_filter`` (a key filter) applies only to files without a
+    deletion vector: DV positions count rows of the whole file."""
+    import pandas as pd
+
+    from paimon_python_spark.agg_merge import read_group_file
+
+    sys_cols = (
+        _lake_key_cols(info) + ["_SEQUENCE_NUMBER", "_VALUE_KIND"]
+        if spec["kv"]
+        else []
     )
-    if max_group_bytes(entries) > budget:
-        return False  # one task would hold the whole group: stay exact
-    return all(
-        isinstance(f.dataType, _BUCKET_LOCAL_TYPES)
-        for f in info.spark_schema.fields
+    cols = sys_cols + list(value_names)
+    frames = []
+    for idx, path, level, colmap, dv in spec["files"]:
+        src_cols = sys_cols + (
+            [colmap[c] for c in value_names if colmap.get(c)]
+            if colmap
+            else list(value_names)
+        )
+        f = read_group_file(
+            path, spec["fmt"], src_cols, None if dv else arrow_filter
+        ).to_pandas(types_mapper=pd.ArrowDtype)
+        if dv:
+            import numpy as np
+
+            pos = read_dv_index_entry(str(dv[0]), int(dv[1]), int(dv[2]))
+            keep = np.setdiff1d(
+                np.arange(len(f), dtype=np.int64), pos.astype(np.int64)
+            )
+            f = f.iloc[keep].reset_index(drop=True)
+        if colmap:
+            f = f.rename(
+                columns={colmap[c]: c for c in value_names if colmap.get(c)}
+            )
+        for c in cols:
+            if c not in f.columns:
+                # dtype-explicit filler: an object all-NA column would
+                # make pd.concat's result dtype depend on pandas version
+                f[c] = pd.Series(
+                    pd.NA,
+                    index=f.index,
+                    dtype=pd.ArrowDtype(_filler_pa_type(info, c)),
+                )
+        f["__neg_lvl"] = -level
+        f["__idx"] = idx
+        frames.append(f)
+    return pd.concat(frames, ignore_index=True)
+
+
+def merge_lake_group(info, spec: dict, value_names, arrow_filter=None):
+    """A PK lake group's visible rows: :func:`read_lake_group` through
+    the shared in-task merge kernel."""
+    from paimon_python_spark.agg_merge import merge_pk_group
+
+    return merge_pk_group(
+        read_lake_group(info, spec, value_names, arrow_filter),
+        _lake_key_cols(info),
+        LAKE_MERGE_ORDER,
+        "_VALUE_KIND",
+        value_names,
+        info.options,
     )
+
+
+def lake_group_output(info, spec: dict, g, fields):
+    """``fields`` of a group's rows as plain-object columns, partition
+    values injected from the spec. Object scalars stay EXACT (NULL ints
+    never detour through float64), and Spark's arrow serializer takes
+    them where it rejects chunk-backed ArrowDtype columns."""
+    import pandas as pd
+
+    out = pd.DataFrame(index=g.index)
+    for f in fields:
+        if f.name in info.partition_keys:
+            v = _part_value(info, f.name, spec["partition"].get(f.name))
+            out[f.name] = pd.Series([v] * len(g), index=g.index, dtype=object)
+        else:
+            col = g[f.name]
+            out[f.name] = col.astype(object).where(col.notna(), None)
+    return out
 
 
 def merge_pk_entries_bucket_local(
@@ -2420,145 +2602,34 @@ def merge_pk_entries_bucket_local(
     fmt="parquet",
     key_predicate=None,
 ):
-    """NO-SHUFFLE merge of a fixed-bucket PK lake — real Paimon's own
+    """NO-SHUFFLE merge of a bucket-closed PK lake — real Paimon's own
     execution shape: a key lives in exactly ONE (partition, bucket)
-    group, so the merge is closed per group and needs no cross-task
-    key clustering. One task per group reads its files with pyarrow
-    (column-complete, Arrow-batched), resolves max-sequence-per-key
-    (level asc, then entry order desc as tie-breaks, ``-D``/``-U``
-    dropped) in-memory, and emits the group's visible rows. The
-    window-function path this replaces shuffles EVERY scanned byte by
-    key — at 100 TB that exchange is the dominant cost of every PK
-    read, while per-group state is bounded by bucket sizing exactly as
-    in Paimon's own per-bucket merge. Plan shape: scan → mapInPandas,
-    zero Exchange nodes (asserted by the gated roundtrip)."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-
+    group, so one task per group reads its files with pyarrow and runs
+    the shared in-task merge (:func:`merge_lake_group`). The
+    key-window path shuffles EVERY scanned byte by key; per-group state
+    here is bounded by bucket sizing exactly as in Paimon's own
+    per-bucket merge. ``needed_cols`` prunes the reads to projection ∪
+    predicate columns (keys always read); ``key_predicate`` (on the
+    ``_KEY_*`` columns) filters parquet reads before the merge. Plan
+    shape: scan → mapInPandas, zero Exchange nodes."""
     part_keys = list(info.partition_keys)
-    trimmed = [k for k in info.primary_keys if k not in part_keys]
-    ignore_delete = (
-        info.options.get("ignore-delete", "false").lower() == "true"
-    )
-    # COLUMN PRUNING pushed into the per-group pyarrow reads — the
-    # bucket-local path has no Catalyst scan to prune for it, so the
-    # caller passes projection ∪ predicate columns (keys always read:
-    # the merge needs them)
     if needed_cols is not None:
         keep = set(needed_cols) | set(info.primary_keys) | set(part_keys)
         value_fields = [f for f in info.spark_schema.fields if f.name in keep]
     else:
         value_fields = list(info.spark_schema.fields)
-    groups: dict = {}
-    for i, e in enumerate(entries):
-        key = (tuple(sorted(e.partition.items())), e.bucket)
-        groups.setdefault(key, []).append((i, e))
-    specs = []
-    for (_, _bkt), es in sorted(groups.items()):
-        e0 = es[0][1]
-        pvals = {}
-        for k in part_keys:
-            v = e0.partition.get(k)
-            # JSON-safe transport; DateType partition values are epoch
-            # days on disk and datetime.date after logical decode
-            if hasattr(v, "isoformat"):
-                v = v.isoformat()
-            pvals[k] = v
-        specs.append(
-            (
-                _json.dumps(
-                    {
-                        "files": [[i, src(e), e.level] for i, e in es],
-                        "partition": pvals,
-                    }
-                ),
-            )
-        )
-    schema = T.StructType(value_fields)
-    kv_value_names = [f.name for f in value_fields if f.name not in part_keys]
-    key_cols = [f"_KEY_{k}" for k in trimmed]
-    read_cols = key_cols + ["_SEQUENCE_NUMBER", "_VALUE_KIND"] + kv_value_names
+    value_names = [f.name for f in value_fields if f.name not in part_keys]
+    specs = [(s,) for s in plan_lake_groups(info, entries, src, fmt)]
 
     def _merge_groups(batches):
-        import datetime
-        import json
+        from paimon_python_spark.agg_merge import key_arrow_filter
 
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        # KEY-predicate pushdown into the per-group reads (parquet
-        # only): every version of a key shares its _KEY_* values, so
-        # filtering kv rows on a key predicate BEFORE the merge keeps
-        # max-seq resolution exact for the surviving keys — a point
-        # lookup reads only the row groups whose stats admit the key
-        # instead of the whole surviving file. Built once per task;
-        # an inexpressible op falls back to unfiltered reads.
-        arrow_filter = None
-        if key_predicate is not None and fmt == "parquet":
-            try:
-                arrow_filter = key_predicate.to_arrow()
-            except Exception:
-                arrow_filter = None
+        arrow_filter = key_arrow_filter(key_predicate)
         for pdf_in in batches:
             for spec_s in pdf_in["spec"]:
                 spec = json.loads(spec_s)
-                frames = []
-                for idx, path, level in spec["files"]:
-                    if fmt == "orc":
-                        import pyarrow.orc as po
-
-                        t = po.ORCFile(path).read(columns=read_cols)
-                    elif arrow_filter is not None:
-                        t = pq.read_table(
-                            path, columns=read_cols, filters=arrow_filter
-                        )
-                    else:
-                        t = pq.read_table(path, columns=read_cols)
-                    # ArrowDtype keeps null ints/big longs EXACT through
-                    # the pandas merge (classic to_pandas would promote
-                    # nullable ints to float64 and corrupt > 2^53)
-                    f = t.to_pandas(types_mapper=pd.ArrowDtype)
-                    f["__lvl"] = level
-                    f["__idx"] = idx
-                    frames.append(f)
-                g = pd.concat(frames, ignore_index=True)
-                if ignore_delete:
-                    # ignore-delete: retracts drop BEFORE the merge so a
-                    # -D can never erase the standing row (read.py's
-                    # pre-merge filter, Paimon's CDC-replay option)
-                    g = g[g["_VALUE_KIND"].isin((0, 2))]
-                # max seq wins; ties: lower level (newer run), then
-                # later commit — mergesort keeps determinism
-                g = g.sort_values(
-                    key_cols + ["_SEQUENCE_NUMBER", "__lvl", "__idx"],
-                    ascending=[True] * len(key_cols) + [False, True, False],
-                    kind="mergesort",
-                )
-                g = g.drop_duplicates(subset=key_cols, keep="first")
-                g = g[g["_VALUE_KIND"].isin((0, 2))]
-                out = pd.DataFrame(index=g.index)
-                for f in value_fields:
-                    if f.name in part_keys:
-                        v = spec["partition"].get(f.name)
-                        if v is not None and isinstance(f.dataType, T.DateType):
-                            if isinstance(v, int):
-                                v = datetime.date(1970, 1, 1) + datetime.timedelta(days=v)
-                            else:
-                                v = datetime.date.fromisoformat(v)
-                        out[f.name] = pd.Series(
-                            [v] * len(g), index=g.index, dtype=object
-                        )
-                    else:
-                        col = g[f.name]
-                        # plain-object output: Spark's arrow serializer
-                        # rejects chunk-backed ArrowDtype columns, and
-                        # object scalars stay EXACT (null ints never
-                        # detour through float64)
-                        out[f.name] = col.astype(object).where(
-                            col.notna(), None
-                        )
-                yield out
+                g = merge_lake_group(info, spec, value_names, arrow_filter)
+                yield lake_group_output(info, spec, g, value_fields)
 
     # one spec row per task partition via parallelize(numSlices=n): each
     # group merges alone and the plan carries ZERO Exchange nodes — the
@@ -2567,7 +2638,7 @@ def merge_pk_entries_bucket_local(
     plan_df = spark.createDataFrame(
         spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
     )
-    return plan_df.mapInPandas(_merge_groups, schema)
+    return plan_df.mapInPandas(_merge_groups, T.StructType(value_fields))
 
 
 def merge_paimon_pk_entries(

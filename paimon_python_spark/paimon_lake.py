@@ -3168,7 +3168,7 @@ def _distributed_lake_write(
     dyn_fresh: bool = False,
 ):
     """EXECUTOR-SIDE data-file write into a real lake's final layout,
-    one file per (partition, bucket) group via ``applyInPandas`` —
+    one file per (partition, bucket) group via ``applyInArrow`` —
     Arrow-batched, no driver materialization, no staging-dir move.
     ``kv=True`` writes Paimon key-value files (``_KEY_*`` system
     columns, per-row ``_SEQUENCE_NUMBER`` from ``seq_base``, sorted by
@@ -3240,7 +3240,7 @@ def _distributed_lake_write(
         # reinsert batch nets to the re-insert. The monotonic id is
         # captured BEFORE the (partition, bucket) shuffle, so each
         # group's pandas frame can be restored to input order even
-        # though applyInPandas delivers rows in shuffle order.
+        # though applyInArrow delivers rows in shuffle order.
         # Changelog-diff writers pass arrival_order=False: their input
         # has at most one logical event per key and the (-U, +U) pair
         # order is the kind order.
@@ -3362,7 +3362,7 @@ def _distributed_lake_write(
     )
     schema_info = info
 
-    def _write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _write_group(pdf: "pd.DataFrame") -> list:
         import datetime
         import os
         import uuid
@@ -3485,9 +3485,7 @@ def _distributed_lake_write(
                 idx_rows = len(merged)
 
         if n == 0:
-            return pd.DataFrame(
-                columns=[f.name for f in meta_schema.fields]
-            )
+            return []
         # target-file-size ROLLING (real Paimon's rolling writer): a
         # group whose Arrow batch exceeds the target splits into
         # consecutive row chunks, one data file each — a partition's
@@ -3584,14 +3582,34 @@ def _distributed_lake_write(
                     "idx_rows": idx_rows if ci == 0 else 0,
                 }
             )
-        return pd.DataFrame(out_rows)
+        return out_rows
+
+    from paimon_python_spark.types import spark_schema_to_pa
+
+    meta_pa = spark_schema_to_pa(meta_schema)
+    session_tz = sdf.sparkSession.conf.get("spark.sql.session.timeZone")
+
+    def _write_arrow_group(tbl):
+        """Arrow → pandas in-task, with NULL-bearing integer columns as
+        exact Python ints (applyInPandas would hand them over as
+        float64 and corrupt values above 2^53); timestamps become
+        naive session-local values, as applyInPandas delivers them."""
+        import pyarrow as pa
+
+        pdf = tbl.to_pandas(integer_object_nulls=True)
+        for fld in tbl.schema:
+            if pa.types.is_timestamp(fld.type) and fld.type.tz:
+                pdf[fld.name] = (
+                    pdf[fld.name].dt.tz_convert(session_tz).dt.tz_localize(None)
+                )
+        return pa.Table.from_pylist(_write_group(pdf), schema=meta_pa)
 
     # pin the group-write's width: the routed rows shuffle only KBs at
     # gate scale, so AQE's byte-coalescing would fold every (partition,
     # bucket) group's file write onto ONE core (profiled: 1-task jobs of
     # 150-250 ms per commit while 31 cores idled). An explicit
     # repartition on the group keys is never coalesced and satisfies
-    # applyInPandas' ClusteredDistribution, so no second exchange.
+    # applyInArrow's ClusteredDistribution, so no second exchange.
     from paimon_python_spark._localdf import pinned_width
 
     # known group-count bound: an UNPARTITIONED fixed-bucket PK table
@@ -3604,7 +3622,7 @@ def _distributed_lake_write(
     _w = pinned_width(sdf.sparkSession, max_groups=_bound)
     if _w > 1:
         sdf = sdf.repartition(_w, *gcols)
-    meta = sdf.groupBy(*gcols).applyInPandas(_write_group, meta_schema).collect()
+    meta = sdf.groupBy(*gcols).applyInArrow(_write_arrow_group, meta_schema).collect()
     if dyn_assigner is not None:
         dyn_assigner.release()
     if dyn_old_files is not None:

@@ -212,46 +212,22 @@ MERGE_ENGINES = ("deduplicate", "first-row", "partial-update", "aggregation")
 from paimon_python_spark.agg_merge import AGG_FUNCTIONS  # noqa: E402,F401
 
 
-#: value dtypes the engine bucket-local merge keeps exact through the
-#: pandas roundtrip (mirrors the lake path's gate)
-_BL_TYPES = (
-    T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.BooleanType,
-    T.FloatType, T.DoubleType, T.StringType, T.DateType,
-)
-
-
-#: default single-task on-disk byte budget for the engine bucket-local
-#: merge (mirrors paimon_import._BUCKET_LOCAL_MAX_GROUP_BYTES): one
-#: split merges in one task's pandas memory, so an oversized split —
-#: bucket=1, or a skewed bucket key — must fall back to the exact
-#: key-window path, whose shuffle spills instead of OOMing.
-_BL_MAX_GROUP_BYTES = 1 << 30
-
-
 def _engine_bucket_local_ok(schema, splits) -> bool:
-    """Eligibility for the NO-SHUFFLE engine PK merge: parquet files,
-    plain deduplicate engine (no salt, no ignore-delete rewrite needed
-    — handled in-task anyway), exact-roundtrip value dtypes, and — the
-    scale guard — no split larger than ``bucket-local.max-group-bytes``
-    on disk. PK splits are already one (partition, bucket) group each
-    (scan._group), which is what closes the merge per task."""
-    if schema.file_format() not in ("parquet", "orc"):
-        return False
-    if schema.options.get("merge-engine", "deduplicate") != "deduplicate":
-        return False
-    if schema.options.get("sequence.field"):
-        # read-side sequence ordering lives in merge_on_read; the
-        # in-task pandas merge sorts by _SEQUENCE_NUMBER only
-        return False
+    """Eligibility for the NO-SHUFFLE engine PK merge: the gate shared
+    with the lake builder (``paimon_import.bucket_local_merge_ok`` —
+    format, engine, dtypes, per-group byte budget) plus no
+    ``bucket-shuffle.salt``. PK splits are already one (partition,
+    bucket) group each (scan._group), which is what closes the merge
+    per task."""
+    from paimon_python_spark.paimon_import import bucket_local_merge_ok
+
     if int(schema.options.get("bucket-shuffle.salt", "0")) > 1:
         return False
-    budget = int(
-        schema.options.get("bucket-local.max-group-bytes", _BL_MAX_GROUP_BYTES)
-    )
-    if any(s.file_size() > budget for s in splits):
-        return False  # one task would hold the whole group: stay exact
-    return all(
-        isinstance(f.dataType, _BL_TYPES) for f in schema.spark_schema.fields
+    return bucket_local_merge_ok(
+        schema.options,
+        schema.spark_schema,
+        schema.file_format(),
+        max((s.file_size() for s in splits), default=0),
     )
 
 
@@ -259,16 +235,14 @@ def merge_on_read_bucket_local(
     spark, schema, splits, needed_cols=None, key_predicate=None
 ) -> DataFrame:
     """NO-SHUFFLE merge-on-read for fixed-bucket engine PK tables —
-    the same execution shape as the lake path
-    (paimon_import.merge_pk_entries_bucket_local): each planned split
-    is one merge-closed (partition, bucket) group, so one task reads
-    the group's files with pyarrow (pruned to projection ∪ predicate
-    columns + keys) and resolves latest-per-key in memory. The window
-    formulation this replaces exchanges every scanned byte on the
-    merge key — the dominant PK-read cost at 100 TB. ``ignore-delete``
-    and ``-D`` drops apply in-task; ties beyond the sequence number
-    break by manifest file order then in-file position (a superset of
-    the window path's seq-only contract, fully deterministic)."""
+    the lake builder's execution shape: each planned split is one
+    merge-closed (partition, bucket) group, so one task reads the
+    group's files with pyarrow (pruned to projection ∪ predicate
+    columns + keys; ``key_predicate`` filters parquet reads) and runs
+    the shared in-task merge (``agg_merge.merge_pk_group``). Ties
+    beyond the sequence number break by manifest file order then
+    in-file position (a superset of the window path's seq-only
+    contract, fully deterministic)."""
     import json as _json
 
     merge_keys = list(dict.fromkeys(schema.partition_keys + schema.primary_keys))
@@ -276,85 +250,50 @@ def merge_on_read_bucket_local(
     if needed_cols is not None:
         keep = set(needed_cols) | set(merge_keys)
         fields = [f for f in fields if f.name in keep]
-    out_schema = T.StructType(fields)
-    read_cols = list(
-        dict.fromkeys([*merge_keys, *[f.name for f in fields], SEQ_COL, KIND_COL])
-    )
-    ignore_delete = (
-        schema.options.get("ignore-delete", "false").lower() == "true"
-    )
     out_names = [f.name for f in fields]
+    value_cols = [n for n in out_names if n not in merge_keys]
+    read_cols = list(dict.fromkeys([*merge_keys, *out_names, SEQ_COL, KIND_COL]))
+    options = schema.options
     fmt = schema.file_format()
-    specs = [
-        (_json.dumps({"files": list(s.file_paths())}),) for s in splits
-    ]
+    specs = [(_json.dumps(list(s.file_paths())),) for s in splits]
 
     def _merge(batches):
         import pandas as pd
-        import pyarrow.parquet as pq
 
-        # KEY-predicate pushdown (parquet): kv rows filter on key
-        # columns BEFORE the merge — sound, every version of a key
-        # shares them — so point lookups read only the row groups
-        # whose stats admit the key
-        arrow_filter = None
-        if key_predicate is not None and fmt == "parquet":
-            try:
-                arrow_filter = key_predicate.to_arrow()
-            except Exception:
-                arrow_filter = None
+        from paimon_python_spark.agg_merge import (
+            key_arrow_filter,
+            merge_pk_group,
+            read_group_file,
+        )
+
+        arrow_filter = key_arrow_filter(key_predicate)
         for pdf_in in batches:
             for spec_s in pdf_in["spec"]:
-                spec = _json.loads(spec_s)
                 frames = []
-                for fi, path in enumerate(spec["files"]):
-                    if fmt == "orc":
-                        import pyarrow.orc as po
-
-                        pf = po.ORCFile(path)
-                        names = pf.schema.names
-                    else:
-                        pf = pq.ParquetFile(path)
-                        names = pf.schema_arrow.names
-                    have = [c for c in read_cols if c in names]
-                    if arrow_filter is not None and fmt == "parquet" and all(
-                        c in names
-                        for c in key_predicate.fields()
-                    ):
-                        f = pq.read_table(
-                            path, columns=have, filters=arrow_filter
-                        ).to_pandas(types_mapper=pd.ArrowDtype)
-                    else:
-                        f = pf.read(columns=have).to_pandas(
-                            types_mapper=pd.ArrowDtype
-                        )
+                for path in _json.loads(spec_s):
+                    f = read_group_file(path, fmt, read_cols, arrow_filter)
+                    f = f.to_pandas(types_mapper=pd.ArrowDtype)
                     for c in read_cols:
                         if c not in f.columns:
                             f[c] = None  # pre-ALTER file: NULL-fill
-                    f["__fi"] = fi
                     frames.append(f)
                 g = pd.concat(frames, ignore_index=True)
-                if ignore_delete:
-                    g = g[g[KIND_COL].isin(ADD_KINDS)]
                 g["__pos"] = range(len(g))
-                g = g.sort_values(
-                    merge_keys + [SEQ_COL, "__fi", "__pos"],
-                    ascending=[True] * len(merge_keys) + [False, False, False],
-                    kind="mergesort",
+                g = merge_pk_group(
+                    g, merge_keys, [SEQ_COL, "__pos"], KIND_COL, value_cols, options
                 )
-                g = g.drop_duplicates(subset=merge_keys, keep="first")
-                g = g[g[KIND_COL].isin(ADD_KINDS)]
-                out = pd.DataFrame(index=g.index)
-                for name in out_names:
-                    col = g[name]
-                    out[name] = col.astype(object).where(col.notna(), None)
-                yield out
+                yield pd.DataFrame(
+                    {
+                        n: g[n].astype(object).where(g[n].notna(), None)
+                        for n in out_names
+                    }
+                )
 
     n = max(1, len(specs))
     plan_df = spark.createDataFrame(
         spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
     )
-    return plan_df.mapInPandas(_merge, out_schema)
+    return plan_df.mapInPandas(_merge, T.StructType(fields))
 
 
 def merge_on_read(

@@ -1585,6 +1585,37 @@ def test_audit_log_through_front_doors(catalog, spark, tmp_path):
     assert got == want and len(got) == 3
 
 
+def test_engine_front_door_keeps_bigint_exact(catalog, spark):
+    """A NULL in a BIGINT column must not push the column through
+    float64: 2^53 + 1 reads back exactly through format('paimon_spark'),
+    merged and as ``$audit_log``, as it does through the read builder."""
+    big = 2**53 + 1
+    schema = pa.schema([pa.field("k", pa.int64(), False), ("v", pa.int64())])
+    catalog.create_table(
+        "default.ds_bigint",
+        Schema(schema, primary_keys=["k"], options={"bucket": "1"}),
+        False,
+    )
+    t = catalog.get_table("default.ds_bigint")
+    wb = t.new_batch_write_builder()
+    w, c = wb.new_write(), wb.new_commit()
+    w.write_arrow(pa.table({"k": [1, 2], "v": [big, None]}, schema=schema))
+    c.commit(w.prepare_commit())
+    want = [(1, big), (2, None)]
+    builder = t.new_read_builder().new_read().to_df().collect()
+    assert sorted((r.k, r.v) for r in builder) == want
+    merged = spark.read.format("paimon_spark").option("path", t.table_path).load()
+    assert sorted((r.k, r.v) for r in merged.collect()) == want
+    audit = (
+        spark.read.format("paimon_spark")
+        .option("path", f"{t.table_path}$audit_log")
+        .load()
+    )
+    assert sorted((r.rowkind, r.k, r.v) for r in audit.collect()) == [
+        ("+I", k, v) for k, v in want
+    ]
+
+
 def test_incremental_between_batch_option(catalog, spark, tmp_path):
     """Batch ``incremental-between`` reads through both front doors —
     Paimon's incremental query ('3,7' snapshot ids or 'tagA,tagB'),

@@ -5035,3 +5035,41 @@ def test_lake_ignore_delete_all_merge_paths(tmp_path, spark):
         spark.read.format("paimon_lake").option("path", d).load().toPandas()
     )
     assert sorted(ds.k.tolist()) == [1, 2]
+
+
+@pytest.mark.parametrize("pk", [True, False])
+def test_lake_write_keeps_bigint_exact(tmp_path, spark, pk):
+    """A NULL in a BIGINT column of a written group must not push the
+    group through float64: 2^53 + 1 lands exactly in the data file and
+    reads back exactly, for a PK write and for an append write whose
+    input is one task (one group holding both rows). The append lake
+    declares a bloom column, which routes its writes through the
+    executor-side group writer that PK writes and compactions use."""
+    import glob
+
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_append,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    big = 2**53 + 1
+    p = str(tmp_path / "bigint_lake")
+    create_lake_table(
+        p,
+        [("k", "BIGINT NOT NULL"), ("v", "BIGINT")],
+        primary_keys=["k"] if pk else None,
+        options=(
+            {"bucket": "1"} if pk else {"file-index.bloom-filter.columns": "k"}
+        ),
+    )
+    df = spark.createDataFrame([(1, big), (2, None)], "k bigint, v bigint")
+    (write_lake_pk_append if pk else write_lake_append)(p, df.coalesce(1))
+    (data_file,) = glob.glob(os.path.join(p, "bucket-0", "data-*.parquet"))
+    stored = pq.read_table(data_file, columns=["k", "v"]).to_pylist()
+    assert sorted((r["k"], r["v"]) for r in stored) == [(1, big), (2, None)]
+    got = PaimonLakeTable(p).new_read_builder().new_read().to_df().collect()
+    assert sorted((r["k"], r["v"]) for r in got) == [(1, big), (2, None)]

@@ -3,9 +3,13 @@ pypaimon/pynative/tests/test_pynative_reader.py (F4/F5 fixtures):
 multi-commit dedup, partitioned PK with cross-partition keys, filters on
 both table kinds, limit split-semantics, delete-row handling."""
 
+import itertools
+
 import pandas as pd
 import pyarrow as pa
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from paimon_python_spark import Schema
 
@@ -1161,3 +1165,196 @@ def test_partial_update_sequence_group_accepts_delete(catalog):
     )
     out = t.new_read_builder().new_read().to_pandas().sort_values("k")
     assert out["k"].tolist() == [1]  # latest record for k=2 is the -D
+
+
+# ---- model test: every PK reader against a pure-Python merge model ----
+
+_BIG = 2**53 + 1  # float64 cannot hold it: a float detour shows
+
+_MODEL_CONFIGS = {
+    "deduplicate": {},
+    "first-row": {"merge-engine": "first-row"},
+    "partial-update": {"merge-engine": "partial-update"},
+    "aggregation": {
+        "merge-engine": "aggregation",
+        "fields.v.aggregate-function": "sum",
+    },
+    "ignore-delete": {"ignore-delete": "true"},
+}
+
+_ADDS = (0, 2)  # +I, +U; -U = 1 and -D = 3 retract
+
+
+def _model_merge(history, options):
+    """{k: (v, s)} visible after replaying ``history`` (commits of
+    {k: (kind, v, s)}, one event per key per commit) under
+    ``options`` — the merge engines' semantics written as plain
+    Python over each key's event list."""
+    engine = options.get("merge-engine", "deduplicate")
+    ignore_delete = options.get("ignore-delete") == "true"
+    events: dict = {}
+    for commit in history:
+        for k, ev in commit.items():
+            if not (ignore_delete and ev[0] not in _ADDS):
+                events.setdefault(k, []).append(ev)
+    out = {}
+    for k, evs in events.items():
+        if engine in ("deduplicate", "first-row"):
+            kind, v, s = evs[-1] if engine == "deduplicate" else evs[0]
+            if kind in _ADDS:
+                out[k] = (v, s)
+            continue
+
+        def last_non_null(i, rows):
+            vals = [e[i] for e in rows if e[i] is not None]
+            return vals[-1] if vals else None
+
+        if engine == "partial-update":
+            out[k] = (last_non_null(1, evs), last_non_null(2, evs))
+            continue
+        adds = [e for e in evs if e[0] in _ADDS]
+        if adds:  # aggregation: sum(v) minus retracted v, last non-null s
+            vs = [e[1] if e[0] in _ADDS else -e[1] for e in evs if e[1] is not None]
+            out[k] = (sum(vs) if vs else None, last_non_null(2, adds))
+    return out
+
+
+_EVENT_VALUES = st.one_of(st.none(), st.integers(-3, 3), st.just(_BIG))
+_HISTORIES = st.lists(
+    st.dictionaries(
+        st.integers(1, 3),
+        st.tuples(
+            st.sampled_from([0, 1, 2, 3]),
+            _EVENT_VALUES,
+            st.one_of(st.none(), st.sampled_from(["a", "b"])),
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    min_size=1,
+    max_size=3,
+)
+_MODEL_SEQ = itertools.count()
+
+
+@pytest.mark.parametrize("config", sorted(_MODEL_CONFIGS))
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(history=_HISTORIES)
+@example(
+    history=[
+        {1: (0, _BIG, "a"), 2: (0, None, "b")},
+        {1: (2, 5, None), 3: (0, _BIG, None)},
+    ]
+)
+def test_pk_readers_match_merge_model(config, history, catalog, spark, tmp_path):
+    """Short PK histories (upserts, -U/-D retracts, NULLs, BIGINTs
+    above 2^53) read back identically to the model through
+    format('paimon_lake'), format('paimon_spark'), both read builders
+    (in-task merge for the deduplicate engine on these one-bucket
+    tables) and both builders' key-window path (forced with
+    bucket-local.max-group-bytes=1)."""
+    import copy
+
+    from pyspark.sql import types as T
+
+    from paimon_python_spark.datasource import register
+    from paimon_python_spark.lake_datasource import register_lake
+    from paimon_python_spark.paimon_import import write_paimon_table_fixture
+    from paimon_python_spark.paimon_lake import PaimonLakeTable
+    from paimon_python_spark.table import Table
+
+    options = _MODEL_CONFIGS[config]
+    if config == "partial-update":
+        # plain partial-update refuses retracts: replay them as upserts
+        history = [
+            {k: (e[0] if e[0] in _ADDS else 2, e[1], e[2]) for k, e in c.items()}
+            for c in history
+        ]
+    want = sorted((k, v, s) for k, (v, s) in _model_merge(history, options).items())
+    register(spark)
+    register_lake(spark)
+    n = next(_MODEL_SEQ)
+
+    def rows(df):
+        return sorted((r["k"], r["v"], r["s"]) for r in df.collect())
+
+    # lake: spec-format fixture, one level-0 file per commit
+    kv = pa.schema(
+        [
+            ("_KEY_k", pa.int32()),
+            ("_SEQUENCE_NUMBER", pa.int64()),
+            ("_VALUE_KIND", pa.int32()),
+            ("k", pa.int32()),
+            ("v", pa.int64()),
+            ("s", pa.string()),
+        ]
+    )
+    files, seq = [], 0
+    for commit in history:
+        ks = sorted(commit)
+        files.append(
+            (
+                0,
+                {},
+                0,
+                pa.table(
+                    {
+                        "_KEY_k": ks,
+                        "_SEQUENCE_NUMBER": list(range(seq, seq + len(ks))),
+                        "_VALUE_KIND": [commit[k][0] for k in ks],
+                        "k": ks,
+                        "v": [commit[k][1] for k in ks],
+                        "s": [commit[k][2] for k in ks],
+                    },
+                    schema=kv,
+                ),
+            )
+        )
+        seq += len(ks)
+    lakes = []
+    for extra in ({}, {"bucket-local.max-group-bytes": "1"}):
+        p = str(tmp_path / f"model_lake_{n}_{len(lakes)}")
+        write_paimon_table_fixture(
+            p,
+            [("k", "INT NOT NULL"), ("v", "BIGINT"), ("s", "STRING")],
+            [],
+            ["k"],
+            files,
+            options={"bucket": "1", **options, **extra},
+        )
+        lakes.append(p)
+    lake_df = spark.read.format("paimon_lake").option("path", lakes[0]).load()
+    assert rows(lake_df) == want, "format('paimon_lake')"
+    for p in lakes:
+        got = rows(PaimonLakeTable(p).new_read_builder().new_read().to_df())
+        assert got == want, f"lake read builder {p}"
+
+    # engine: one write per commit with explicit row kinds
+    name = f"default.model_{n}"
+    catalog.create_table(
+        name,
+        Schema(
+            pa.schema([pa.field("k", pa.int32(), False), ("v", pa.int64()), ("s", pa.string())]),
+            primary_keys=["k"],
+            options={"bucket": "1", **options},
+        ),
+        False,
+    )
+    t = catalog.get_table(name)
+    for commit in history:
+        _write(
+            t,
+            [(k, v, s, kind) for k, (kind, v, s) in sorted(commit.items())],
+            row_kind_col="_kind",
+        )
+    eng_df = spark.read.format("paimon_spark").option("path", t.table_path).load()
+    assert rows(eng_df) == want, "format('paimon_spark')"
+    window_schema = copy.deepcopy(t.schema)
+    window_schema.options["bucket-local.max-group-bytes"] = "1"
+    for tbl in (t, Table(name, t.table_path, window_schema)):
+        got = rows(tbl.new_read_builder().new_read().to_df())
+        assert got == want, f"engine read builder {tbl.schema.options}"
