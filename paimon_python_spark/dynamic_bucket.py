@@ -111,30 +111,26 @@ def _make_key_hash_fn(key_types):
     def fn(*cols):
         import pandas as pd
 
-        from paimon_python_spark.paimon_lake import (
-            _lake_bucket_key_logical,
-            _vectorized_fixed_buckets,
-        )
+        from paimon_python_spark.paimon_lake import _vectorized_fixed_buckets
 
         try:
             return pd.Series(_vectorized_fixed_buckets(cols, key_types, None))
         except Exception:
             from paimon_python_spark.paimon_import import (
                 encode_binary_row,
+                logical_value,
                 murmur_hash_words,
             )
 
-            out = []
-            for vals in zip(*cols):
-                row = [
-                    None
-                    if (v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)))
-                    else _lake_bucket_key_logical(v, t)
-                    for v, t in zip(vals, key_types)
-                ]
-                out.append(
-                    murmur_hash_words(encode_binary_row(row, key_types)[4:])
+            out = [
+                murmur_hash_words(
+                    encode_binary_row(
+                        [logical_value(v, t) for v, t in zip(vals, key_types)],
+                        key_types,
+                    )[4:]
                 )
+                for vals in zip(*cols)
+            ]
             return pd.Series(out, dtype="int32")
 
     return fn
@@ -142,9 +138,8 @@ def _make_key_hash_fn(key_types):
 
 def _part_json_of(pvals: dict, part_keys: List[str]) -> str:
     """Canonical partition-group id — identical construction to
-    ``_distributed_lake_write``'s ``_write_group`` meta rows (logical
-    values: DATE as epoch days), so index metas and data metas key the
-    same way."""
+    ``paimon_lake._write_lake_group``'s meta rows (logical values: DATE
+    as epoch days), so index metas and data metas key the same way."""
     return json.dumps({k: pvals[k] for k in part_keys})
 
 
@@ -363,7 +358,10 @@ class DynamicBucketAssigner:
         # non-persisted fragment paid it again); the parsed expression
         # keeps the stage whole-stage-codegen (guide §4.1). Fallback:
         # the vectorized pandas UDF for unsupported key types.
-        from paimon_python_spark.paimon_import import binary_row_hash_expr
+        from paimon_python_spark.paimon_import import (
+            binary_row_hash_expr,
+            logical_value,
+        )
 
         _hexpr = binary_row_hash_expr(self.bcols, self.key_types)
         if _hexpr is not None:
@@ -384,7 +382,7 @@ class DynamicBucketAssigner:
             batch_parts = sdf.select(*part_keys).distinct().collect()
         pj_of = lambda r: _part_json_of(
             {
-                k: _logical_value(r[k], self.info.spark_schema[k].dataType)
+                k: logical_value(r[k], self.info.spark_schema[k].dataType)
                 for k in part_keys
             },
             part_keys,
@@ -514,27 +512,6 @@ def _part_cond(left, right, part_keys):
     for k in part_keys:
         cond = cond & left[k].eqNullSafe(right[k])
     return cond
-
-
-def _logical_value(v, dt):
-    """Pandas/Row value → the logical value ``encode_binary_row``
-    expects (identical to ``_write_group``'s ``logical``: DATE as epoch
-    days, numpy scalars unboxed)."""
-    import datetime
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
-        return None
-    if hasattr(v, "item"):
-        v = v.item()
-    if isinstance(dt, T.DateType):
-        if isinstance(v, datetime.datetime):
-            v = v.date()
-        if isinstance(v, datetime.date):
-            return (v - datetime.date(1970, 1, 1)).days
-    return v
 
 
 def pending_to_entries(info, pending: list) -> list:
@@ -841,6 +818,7 @@ class CrossPartitionRouter:
         if old is not None and self._probe_rows is not None and part_keys:
             from paimon_python_spark.paimon_import import (
                 logical_partition_values,
+                logical_value,
             )
 
             hint, seen = [], set()
@@ -848,7 +826,7 @@ class CrossPartitionRouter:
                 pv = {k: r[k] for k in part_keys}
                 pj = _part_json_of(
                     {
-                        k: _logical_value(
+                        k: logical_value(
                             pv[k], info.spark_schema[k].dataType
                         )
                         for k in part_keys

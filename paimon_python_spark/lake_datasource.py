@@ -590,6 +590,7 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition: _LakeGroupPartition):
+        from paimon_python_spark.agg_merge import read_group_file
         from paimon_python_spark.paimon_import import _part_value
 
         spec = json.loads(partition.spec)
@@ -618,7 +619,7 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
         kv = bool(spec.get("kv")) and self.changelog
         if kv:
             src_cols = src_cols + ["_VALUE_KIND"]
-        tbl = _read_one(spec["path"], spec["fmt"], src_cols)
+        tbl = read_group_file(spec["path"], spec["fmt"], src_cols)
         cols = {}
         for n in names:
             if n in part_keys:
@@ -647,33 +648,9 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
         yield from zip(*out)
 
 
-
-
-def _read_one(path: str, fmt: str, cols):
-    if fmt == "orc":
-        import pyarrow.orc as po
-
-        f = po.ORCFile(path)
-        return f.read(columns=[c for c in cols if c in f.schema.names])
-    if fmt == "avro":
-        import pyarrow as pa
-
-        from paimon_python_spark.avro_codec import read_avro_table
-
-        with open(path, "rb") as fh:
-            names, rows = read_avro_table(fh.read())
-        keep = [c for c in cols if c in names]
-        idx = {c: names.index(c) for c in keep}
-        return pa.table({c: [r[idx[c]] for r in rows] for c in keep})
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    return pf.read(columns=[c for c in cols if c in pf.schema_arrow.names])
-
-
 class _LakeWrittenFiles(WriterCommitMessage):
     def __init__(self, files, new_hashes=None):
-        #: [(relative path, {partition key: logical value}, row count)]
+        #: one ``paimon_lake._write_lake_group`` meta row per data file
         self.files = files
         #: dynamic-bucket only: {(part_json, bucket): [new key hashcodes]}
         #: — the commit unions them into the buckets' HASH index files
@@ -690,15 +667,15 @@ class PaimonLakeBatchWriter(DataSourceWriter):
     Executor side (``write``): each task groups its rows by partition
     values (PK lakes additionally by ``abs(murmur(BinaryRow(bucket
     key))) % num_buckets`` — the same FixedBucketRowKeyExtractor
-    routing write_lake_pk_append uses) and writes one spec-named data
-    file per group directly into the lake's ``<k>=<v>/bucket-<b>/``
-    layout. PK groups write key-value files: ``_KEY_*`` columns, a
-    fresh ``_SEQUENCE_NUMBER`` range past every live file's max
-    (``sequence.field`` honored when declared), sorted by trimmed key —
-    plus per-file value stats and the table's configured bloom file
-    index, so front-door files prune exactly like builder-written ones.
-    Driver side (``commit``): only when every task succeeded, one spec
-    snapshot commits atomically (OVERWRITE commits DELETE entries for
+    routing write_lake_pk_append uses) and hands each group to
+    ``paimon_lake._write_lake_group``, the group writer behind every
+    builder write, so front-door files are built exactly like
+    builder-written ones: PK groups write key-value files with a fresh
+    ``_SEQUENCE_NUMBER`` range past every live file's max
+    (``sequence.field`` honored when declared), every file carries
+    value stats and the table's declared file indexes, and a group
+    rolls at ``target-file-size``. Driver side (``commit``): only when
+    every task succeeded, one spec snapshot commits atomically (OVERWRITE commits DELETE entries for
     every previously-visible file and drop the DV index, exactly like
     overwrite_lake); ``abort`` removes the orphan files — readers only
     ever see committed snapshots either way.
@@ -709,8 +686,7 @@ class PaimonLakeBatchWriter(DataSourceWriter):
     ``|hash| % dynamic-bucket.initial-buckets`` (unshuffled tasks agree
     without coordination), and the commit unions the new hashcodes into
     the touched buckets' index files (overwrite rebuilds the index from
-    the new data). avro/orc lakes write through the engine codecs with
-    in-task value stats.
+    the new data).
 
     Refusals (with pointers, not half-support): cross-partition PK
     lakes (the retraction protocol is a driver-side DataFrame concern —
@@ -873,402 +849,136 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         )
         self._dyn_mod = max(1, int(init))
 
-    def _write_pk(self, iterator) -> _LakeWrittenFiles:
-        """Executor-side PK task write: route rows to (partition,
-        bucket) with the writer's murmur hash, one sorted level-0
-        key-value file per group (mirrors the shape
-        paimon_lake._distributed_lake_write's task writes). Parallel
-        tasks share the plan-time sequence base — same-key collisions
-        across tasks tie-break by file order at read, exactly like real
-        Paimon's per-writer sequence generators."""
-        import datetime
-        import os
-        import uuid
-
-        import pandas as pd
-        import pyarrow as pa
-
-        from paimon_python_spark.paimon_import import (
-            DEFAULT_PARTITION_NAME,
-            _value_stats_for,
-            _write_fixture_data_file,
-            encode_binary_row,
-            format_partition_segment,
-        )
-        from paimon_python_spark.paimon_lake import (
-            _bloom_option_cols,
-            _embedded_index_payload,
-            _make_lake_bucket_fn,
-            _split_standalone_index,
-        )
-        from paimon_python_spark.types import spark_type_to_pa
-
-        info = self.info
-        part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
-        trimmed = [k for k in info.primary_keys if k not in part_keys]
-        trimmed_types = [info.spark_schema[k].dataType for k in trimmed]
-        names = [f.name for f in info.spark_schema.fields]
-        default_name = info.options.get(
-            "partition.default-name", DEFAULT_PARTITION_NAME
-        )
-        seq_field = info.options.get("sequence.field") or None
-        (
-            bloom_cols,
-            bloom_spec,
-            bloom_dtypes,
-            bitmap_cols,
-            bitmap_kinds,
-            bsi_cols,
-            bsi_kinds,
-        ) = _bloom_option_cols(info)
-        from paimon_python_spark.paimon_lake import _target_file_size
-
-        target_bytes = _target_file_size(info)
-        rows = [tuple(row[n] for n in names) for row in iterator]
-        if not rows:
-            return _LakeWrittenFiles([])
-        pdf = pd.DataFrame(rows, columns=names)
-        bcols = list(self.bucket_cols or trimmed)
-        key_types = [info.spark_schema[c].dataType for c in bcols]
-        # typed key series (object-dtype columns from row tuples would
-        # push the router onto its per-row scalar fallback)
-        typed_keys = [
-            pa.array(
-                pdf[c], type=spark_type_to_pa(info.spark_schema[c].dataType)
-            ).to_pandas()
-            for c in bcols
-        ]
-        if not self.dynamic:
-            bfn = _make_lake_bucket_fn(key_types, self.num_buckets)
-            buckets = bfn(*typed_keys).tolist()
-
-        epoch = datetime.date(1970, 1, 1)
-
-        def logical(v, dt):
-            if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
-                return None
-            if hasattr(v, "item"):
-                v = v.item()
-            if isinstance(dt, T.DateType):
-                if isinstance(v, datetime.datetime):
-                    v = v.date()
-                if isinstance(v, datetime.date):
-                    return (v - epoch).days
-            return v
-
-        part_cols = [pdf[k].tolist() for k in part_keys]
-        new_by_group: dict = {}
-        if self.dynamic:
-            # route against the plan-time HASH index snapshot: existing
-            # hashcodes keep their bucket (binary search per partition);
-            # new ones assign |hash| % initial-buckets — deterministic,
-            # so unshuffled tasks seeing the same key always agree
-            import json as _json
-
-            import numpy as np
-
-            from paimon_python_spark.dynamic_bucket import (
-                _make_key_hash_fn,
-            )
-
-            hashes = (
-                _make_key_hash_fn(key_types)(*typed_keys)
-                .to_numpy()
-                .astype(np.int32)
-            )
-            pjs = np.array(
-                [
-                    _json.dumps(
-                        {
-                            k: logical(c[i], t)
-                            for k, c, t in zip(part_keys, part_cols, part_types)
-                        }
-                    )
-                    for i in range(len(pdf))
-                ],
-                dtype=object,
-            )
-            buckets = np.empty(len(pdf), dtype=np.int64)
-            for pj in set(pjs.tolist()):
-                mask = pjs == pj
-                hs = hashes[mask]
-                hb, bb = self._dyn_index.get(pj, (b"", b""))
-                sorted_h = np.frombuffer(hb, dtype=np.int32)
-                bucket_of = np.frombuffer(bb, dtype=np.int32)
-                if len(sorted_h):
-                    pos = np.searchsorted(sorted_h, hs).clip(
-                        0, len(sorted_h) - 1
-                    )
-                    found = sorted_h[pos] == hs
-                    assigned = np.where(
-                        found,
-                        bucket_of[pos],
-                        np.abs(hs.astype(np.int64)) % self._dyn_mod,
-                    )
-                else:
-                    found = np.zeros(len(hs), dtype=bool)
-                    assigned = np.abs(hs.astype(np.int64)) % self._dyn_mod
-                buckets[mask] = assigned
-                # append: record NEW hashcodes for the commit's index
-                # union; overwrite: record EVERY hashcode — the commit
-                # rebuilds the index from scratch (old keys are gone)
-                rec = (
-                    np.ones(len(hs), dtype=bool) if self.overwrite else ~found
-                )
-                for b in np.unique(assigned[rec]):
-                    grp = new_by_group.setdefault((pj, int(b)), set())
-                    grp.update(
-                        int(x)
-                        for x in np.unique(hs[rec][assigned[rec] == b])
-                    )
-            buckets = buckets.tolist()
-        groups: dict = {}
-        for i in range(len(pdf)):
-            key = (
-                tuple(
-                    logical(c[i], t) for c, t in zip(part_cols, part_types)
-                ),
-                int(buckets[i]),
-            )
-            groups.setdefault(key, []).append(i)
-        written = []
-        for (pvals_t, bucket), idxs in groups.items():
-            # ascending row indices preserve arrival order; the stable
-            # sort then sequences same-key rows in arrival order
-            sub = pdf.iloc[idxs]
-            if trimmed:
-                sub = sub.sort_values(trimmed, kind="mergesort")
-            sub = sub.reset_index(drop=True)
-            n = len(sub)
-            arrays = {}
-            for k, t in zip(trimmed, trimmed_types):
-                arrays[f"_KEY_{k}"] = pa.array(sub[k], type=spark_type_to_pa(t))
-            if seq_field is not None:
-                sv = sub[seq_field]
-                if len(sv) and isinstance(
-                    sv.iloc[0], (datetime.datetime, pd.Timestamp)
-                ):
-                    seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
-                else:
-                    seqs = [int(x) for x in sv]
-            else:
-                seqs = list(range(self.seq_base, self.seq_base + n))
-            arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-            # rowkind.field: kinds come from the USER column (the
-            # builder's contract) — all +I otherwise
-            rk_field = info.options.get("rowkind.field")
-            if rk_field:
-                from paimon_python_spark.datasource import _decode_rowkind
-
-                if rk_field not in sub.columns:
-                    raise ValueError(
-                        f"rowkind.field {rk_field!r} is not a table column"
-                    )
-                kinds = [_decode_rowkind(v) for v in sub[rk_field]]
-            else:
-                kinds = [0] * n
-            arrays["_VALUE_KIND"] = pa.array(kinds, pa.int32())
-            for f in info.spark_schema.fields:
-                arrays[f.name] = pa.array(
-                    sub[f.name], type=spark_type_to_pa(f.dataType)
-                )
-            table = pa.table(arrays)
-            pvals = dict(zip(part_keys, pvals_t))
-            rel_parts = [
-                f"{k}={format_partition_segment(pvals[k], dt, default_name)}"
-                for k, dt in zip(part_keys, part_types)
-            ]
-            ddir = os.path.join(self.table_path, *rel_parts, f"bucket-{bucket}")
-            os.makedirs(ddir, exist_ok=True)
-            # target-file-size rolling, same rule as the group writer:
-            # sorted chunks keep per-file key ranges disjoint
-            n_files = 1
-            if n > 1 and target_bytes and table.nbytes > target_bytes:
-                n_files = min(n, -(-table.nbytes // target_bytes))
-            rows_per = -(-n // n_files)
-            for ci in range(n_files):
-                lo = ci * rows_per
-                hi = min(n, lo + rows_per)
-                if lo >= hi:
-                    continue
-                sub_tbl = table.slice(lo, hi - lo)
-                sub_pdf = sub.iloc[lo:hi]
-                sub_seqs = seqs[lo:hi]
-                name = f"data-{uuid.uuid4()}-{ci}.{self.fmt}"
-                fpath = os.path.join(ddir, name)
-                _write_fixture_data_file(sub_tbl, fpath, self.fmt)
-                kmin = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[0], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-                kmax = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[-1], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-                stats = _value_stats_for(sub_tbl, info)
-                emb = _embedded_index_payload(
-                    sub_pdf,
-                    bloom_cols,
-                    bloom_spec,
-                    bloom_dtypes,
-                    bitmap_cols,
-                    bitmap_kinds,
-                    bsi_cols,
-                    bsi_kinds,
-                )
-                emb, extra = _split_standalone_index(emb, info, ddir, name)
-                written.append(
-                    {
-                        "rel": os.path.join(
-                            *rel_parts, f"bucket-{bucket}", name
-                        )
-                        if rel_parts
-                        else os.path.join(f"bucket-{bucket}", name),
-                        "pvals": pvals,
-                        "bucket": bucket,
-                        "rows": hi - lo,
-                        "size": os.path.getsize(fpath),
-                        "min_seq": min(sub_seqs) if sub_seqs else self.seq_base,
-                        "max_seq": max(sub_seqs) if sub_seqs else self.seq_base,
-                        "min_key": kmin,
-                        "max_key": kmax,
-                        "stats": stats,
-                        "emb": emb,
-                        "extra": extra,
-                    }
-                )
-        return _LakeWrittenFiles(
-            written,
-            new_hashes=(
-                {k: sorted(v) for k, v in new_by_group.items()}
-                if new_by_group
-                else None
-            ),
-        )
-
     def write(self, iterator) -> _LakeWrittenFiles:
-        if self.is_pk:
-            return self._write_pk(iterator)
-        import datetime
-        import uuid
-
+        """Executor-side task write: route this task's rows to
+        (partition, bucket) groups and hand each group to the lake
+        group writer (``paimon_lake._write_lake_group``, the builder's
+        writer too). PK lakes route by the fixed-bucket hash — or, on
+        dynamic-bucket lakes, the plan-time HASH index; append lakes
+        write bucket 0. Parallel tasks share the plan-time sequence
+        base — same-key collisions across tasks tie-break by file order
+        at read, exactly like real Paimon's per-writer sequence
+        generators."""
+        import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        from paimon_python_spark.paimon_import import (
-            DEFAULT_PARTITION_NAME,
-            format_partition_segment,
+        from paimon_python_spark.paimon_import import logical_value
+        from paimon_python_spark.paimon_lake import (
+            _group_frame,
+            _make_lake_bucket_fn,
+            _write_lake_group,
         )
         from paimon_python_spark.types import spark_schema_to_pa
 
         info = self.info
-        part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
-        default_name = info.options.get(
-            "partition.default-name", DEFAULT_PARTITION_NAME
-        )
-        value_fields = [
-            f for f in info.spark_schema.fields if f.name not in part_keys
-        ]
-        pa_schema = spark_schema_to_pa(T.StructType(value_fields))
-
-        def logical(v, dt):
-            # on-disk logical form: DATE → epoch days (BinaryRow + dirs)
-            if v is not None and isinstance(dt, T.DateType):
-                if isinstance(v, datetime.datetime):
-                    v = v.date()
-                return (v - datetime.date(1970, 1, 1)).days
-            return v
-
-        groups: dict = {}
-        for row in iterator:
-            key = tuple(
-                logical(row[k], dt) for k, dt in zip(part_keys, part_types)
-            )
-            groups.setdefault(key, []).append(
-                tuple(row[f.name] for f in value_fields)
-            )
-        written = []
-        for key, rows in groups.items():
-            rel_parts = [
-                f"{k}={format_partition_segment(v, dt, default_name)}"
-                for k, v, dt in zip(part_keys, key, part_types)
-            ]
-            ddir = os.path.join(self.table_path, *rel_parts, "bucket-0")
-            os.makedirs(ddir, exist_ok=True)
-            name = f"data-{uuid.uuid4()}-0.{self.fmt}"
-            cols = list(zip(*rows)) if rows else [[] for _ in value_fields]
-            table = pa.Table.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
+        names = info.spark_schema.fieldNames()
+        rows = [tuple(row[n] for n in names) for row in iterator]
+        if not rows:
+            return _LakeWrittenFiles([])
+        pa_schema = spark_schema_to_pa(info.spark_schema)
+        pdf = _group_frame(
+            pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(zip(*rows), pa_schema)],
                 schema=pa_schema,
             )
-            from paimon_python_spark.paimon_import import (
-                _value_stats_for,
-                _write_fixture_data_file,
-            )
+        )
+        n = len(pdf)
+        pdf["__input_order"] = np.arange(n)
+        part_keys = list(info.partition_keys)
+        part_types = [info.spark_schema[k].dataType for k in part_keys]
+        part_rows = zip(*[pdf[k] for k in part_keys]) if part_keys else [()] * n
+        by_part: dict = {}
+        for i, vals in enumerate(part_rows):
+            key = tuple(logical_value(v, t) for v, t in zip(vals, part_types))
+            by_part.setdefault(key, []).append(i)
+        buckets = np.zeros(n, dtype=np.int64)
+        new_hashes: dict = {}
+        if self.is_pk:
+            rk_field = info.options.get("rowkind.field")
+            if rk_field:
+                # rowkind.field: kinds come from the USER column (the
+                # builder's contract) — all +I otherwise
+                from paimon_python_spark.datasource import _decode_rowkind
 
-            _write_fixture_data_file(table, os.path.join(ddir, name), self.fmt)
-            # avro/orc carry no usable footer-at-commit path: compute
-            # value stats in-task over the batch (parquet keeps its
-            # zero-extra-IO footer fold at commit time)
-            stats = (
-                _value_stats_for(table, info) if self.fmt != "parquet" else None
+                if rk_field not in pdf.columns:
+                    raise ValueError(
+                        f"rowkind.field {rk_field!r} is not a table column"
+                    )
+                pdf["__row_kind"] = [_decode_rowkind(v) for v in pdf[rk_field]]
+            bcols = list(
+                self.bucket_cols
+                or [k for k in info.primary_keys if k not in part_keys]
             )
-            emb, extra = None, None
-            if rows:
-                # honor the table's declared file indexes (bloom/bitmap
-                # /bsi columns) — front-door files must prune like
-                # builder-written ones
-                from paimon_python_spark.paimon_lake import (
-                    _bloom_option_cols,
-                    _embedded_index_payload,
-                    _split_standalone_index,
-                )
+            key_types = [info.spark_schema[c].dataType for c in bcols]
+            key_cols = [pdf[c] for c in bcols]
+            if self.dynamic:
+                from paimon_python_spark.dynamic_bucket import _make_key_hash_fn
 
-                opts = _bloom_option_cols(info)
-                if opts[0] or opts[3] or opts[5]:
-                    emb = _embedded_index_payload(
-                        table.to_pandas(), *opts
-                    )
-                    emb, extra = _split_standalone_index(
-                        emb, info, ddir, name
-                    )
-            written.append(
-                (
-                    os.path.join(*rel_parts, "bucket-0", name)
-                    if rel_parts
-                    else os.path.join("bucket-0", name),
-                    dict(zip(part_keys, key)),
-                    len(rows),
-                    emb,
-                    extra,
-                    stats,
+                hashes = (
+                    _make_key_hash_fn(key_types)(*key_cols)
+                    .to_numpy()
+                    .astype(np.int32)
                 )
+                for key, idx in by_part.items():
+                    pj = json.dumps(dict(zip(part_keys, key)))
+                    buckets[idx] = self._route_dynamic(pj, hashes[idx], new_hashes)
+            else:
+                buckets[:] = _make_lake_bucket_fn(key_types, self.num_buckets)(
+                    *key_cols
+                ).to_numpy()
+        seq_field = info.options.get("sequence.field") or None
+        written = []
+        for idx in by_part.values():
+            part, part_buckets = pdf.iloc[idx], buckets[idx]
+            for b in np.unique(part_buckets):
+                written += _write_lake_group(
+                    part[part_buckets == b],
+                    info,
+                    self.table_path,
+                    self.fmt,
+                    self.is_pk,
+                    bucket=int(b),
+                    seq_base=self.seq_base,
+                    sequence_field=seq_field,
+                )
+        return _LakeWrittenFiles(
+            written,
+            new_hashes={k: sorted(v) for k, v in new_hashes.items()} or None,
+        )
+
+    def _route_dynamic(self, pj: str, hs, new_hashes: dict):
+        """Buckets for one partition's key hashcodes ``hs`` against the
+        plan-time HASH index: existing hashcodes keep their bucket, new
+        ones assign ``|hash| % initial-buckets`` — deterministic, so
+        unshuffled tasks seeing the same key always agree. Adds to
+        ``new_hashes[(pj, bucket)]`` what the commit unions into each
+        bucket's index file: the new hashcodes, or on overwrite every
+        one (the commit rebuilds the index from scratch)."""
+        import numpy as np
+
+        hb, bb = self._dyn_index.get(pj, (b"", b""))
+        sorted_h = np.frombuffer(hb, dtype=np.int32)
+        bucket_of = np.frombuffer(bb, dtype=np.int32)
+        assigned = np.abs(hs.astype(np.int64)) % self._dyn_mod
+        found = np.zeros(len(hs), dtype=bool)
+        if len(sorted_h):
+            pos = np.searchsorted(sorted_h, hs).clip(0, len(sorted_h) - 1)
+            found = sorted_h[pos] == hs
+            assigned = np.where(found, bucket_of[pos], assigned)
+        rec = np.ones(len(hs), dtype=bool) if self.overwrite else ~found
+        for b in np.unique(assigned[rec]):
+            new_hashes.setdefault((pj, int(b)), set()).update(
+                int(x) for x in np.unique(hs[rec][assigned[rec] == b])
             )
-        return _LakeWrittenFiles(written)
+        return assigned
 
     def commit(self, messages) -> None:
-        import pyarrow.parquet as pq
-
-        from paimon_python_spark.paimon_import import (
-            _spec_file_meta,
-            encode_binary_row,
-        )
         from paimon_python_spark.paimon_lake import (
             _commit_lake_snapshot,
-            _parquet_footer_value_stats,
+            _lake_meta_entry,
         )
 
         info = self.info
-        part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
         entries = []
         dyn_new: dict = {}
         for m in messages:
@@ -1277,65 +987,7 @@ class PaimonLakeBatchWriter(DataSourceWriter):
             if getattr(m, "new_hashes", None):
                 for k, hs in m.new_hashes.items():
                     dyn_new.setdefault(tuple(k), set()).update(hs)
-            for f in m.files:
-                if self.is_pk:
-                    if f["rows"] == 0:
-                        continue
-                    entries.append(
-                        {
-                            "_VERSION": 2,
-                            "_KIND": 0,
-                            "_PARTITION": encode_binary_row(
-                                [f["pvals"][k] for k in part_keys], part_types
-                            ),
-                            "_BUCKET": int(f["bucket"]),
-                            "_TOTAL_BUCKETS": self.num_buckets,
-                            "_FILE": _spec_file_meta(
-                                os.path.basename(f["rel"]),
-                                int(f["size"]),
-                                int(f["rows"]),
-                                schema_id=info.id,
-                                value_stats=f["stats"],
-                                min_key=f["min_key"],
-                                max_key=f["max_key"],
-                                min_seq=int(f["min_seq"]),
-                                max_seq=int(f["max_seq"]),
-                                level=0,
-                                embedded_index=f["emb"],
-                                extra_files=(
-                                    [f["extra"]] if f.get("extra") else None
-                                ),
-                            ),
-                        }
-                    )
-                    continue
-                rel, pvals, rows, emb, extra, stats = f
-                if rows == 0:
-                    continue
-                dest = os.path.join(self.table_path, rel)
-                if stats is None and rel.endswith(".parquet"):
-                    md = pq.ParquetFile(dest).metadata
-                    stats = _parquet_footer_value_stats(md, info)
-                entries.append(
-                    {
-                        "_VERSION": 2,
-                        "_KIND": 0,
-                        "_PARTITION": encode_binary_row(
-                            [pvals[k] for k in part_keys], part_types
-                        ),
-                        "_BUCKET": 0,
-                        "_TOTAL_BUCKETS": 1,
-                        "_FILE": _spec_file_meta(
-                            os.path.basename(rel),
-                            os.path.getsize(dest),
-                            rows,
-                            schema_id=info.id,
-                            value_stats=stats,
-                            embedded_index=emb,
-                            extra_files=[extra] if extra else None,
-                        ),
-                    }
-                )
+            entries += [_lake_meta_entry(r, info, self.num_buckets) for r in m.files]
         if not entries and not self.overwrite:
             return  # empty append is a successful no-op, like every
             # standard Spark sink (parquet/JDBC) — no snapshot commits
@@ -1409,19 +1061,18 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         return pending_to_entries(self.info, pending)
 
     def abort(self, messages) -> None:
+        from paimon_python_spark.paimon_lake import _lake_bucket_dir
+
         for m in messages:
             if m is None:
                 continue
-            for f in m.files:
-                rel = f["rel"] if self.is_pk else f[0]
-                p = os.path.join(self.table_path, rel)
-                if os.path.exists(p):
-                    os.remove(p)
-                extra = f.get("extra") if self.is_pk else f[4]
-                if extra:
-                    xp = os.path.join(os.path.dirname(p), extra)
-                    if os.path.exists(xp):
-                        os.remove(xp)
+            for r in m.files:
+                ddir = _lake_bucket_dir(
+                    self.table_path, self.info, json.loads(r["part_json"]), r["bucket"]
+                )
+                for name in (r["file_name"], r["extra_idx"]):
+                    if name and os.path.exists(os.path.join(ddir, name)):
+                        os.remove(os.path.join(ddir, name))
 
 
 class PaimonLakeSystemReader(DataSourceReader):

@@ -406,6 +406,43 @@ def encode_binary_row(values: List[Any], types: List[T.DataType]) -> bytes:
     return struct.pack("<i", arity) + bytes(fixed) + bytes(var)
 
 
+def logical_value(v, dt: T.DataType):
+    """One pandas/Row/literal value as the logical value
+    ``encode_binary_row`` takes: None/NA → None, numpy scalars unboxed,
+    DATE → epoch days (a datetime under a DATE field counts as its
+    date)."""
+    import datetime
+
+    import pandas as pd
+
+    if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
+        return None
+    if hasattr(v, "item"):
+        v = v.item()
+    if isinstance(dt, T.DateType):
+        if isinstance(v, datetime.datetime):
+            v = v.date()
+        if isinstance(v, datetime.date):
+            return (v - datetime.date(1970, 1, 1)).days
+    return v
+
+
+#: Spark types the BinaryRow codec encodes — every primary-key,
+#: bucket-key and partition column of a lake must be one of them
+BINARY_ROW_TYPES = (
+    T.IntegerType,
+    T.LongType,
+    T.ShortType,
+    T.ByteType,
+    T.BooleanType,
+    T.FloatType,
+    T.DoubleType,
+    T.DateType,
+    T.StringType,
+    T.BinaryType,
+)
+
+
 def murmur_hash_words(data: bytes, seed: int = 42) -> int:
     """Murmur3-32 over little-endian 4-byte words, Paimon flavor: the
     public ``MurmurHashUtils.hashBytesByWords`` (seed 42, no tail
@@ -490,8 +527,9 @@ def binary_row_hash_expr(col_names, types) -> "str | None":
     ``murmur_hash_words(encode_binary_row(values)[4:])`` — the signed
     int32 BinaryRow hashCode Paimon's bucket routing is built on —
     entirely in JVM built-ins. Returns ``None`` when any key type is
-    outside the supported set (float/double/decimal/timestamp keys
-    fall back to the vectorized pandas UDF).
+    outside the supported set: only float and double keys take the
+    vectorized pandas-UDF route (the BinaryRow codec has no DECIMAL or
+    TIMESTAMP encoding, so ``create_lake_table`` refuses those keys).
 
     Byte layout reproduced (see encode_binary_row): 8-byte null bitset
     (bit 8+i marks field i null), one 8-byte little-endian slot per
@@ -2484,7 +2522,7 @@ def _filler_pa_type(info, col: str):
     """Arrow type for a NULL-filled column (dropped field id in a
     pre-evolution file): value/key columns follow the current table
     schema; the two sequence system columns are fixed by the writer
-    (paimon_lake._write_kv_files: int64 / int32)."""
+    (paimon_lake._write_lake_group: int64 / int32)."""
     import pyarrow as pa
 
     from paimon_python_spark.types import spark_type_to_pa

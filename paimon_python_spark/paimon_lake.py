@@ -602,23 +602,6 @@ def _limited_entries(entries, limit: "int | None"):
     return out
 
 
-def _lake_bucket_key_logical(v, dt):
-    """Normalize one bucket-key literal to the logical value the lake
-    writer hashed (DATE → epoch days, numpy scalars unwrapped) —
-    mirrors the lake bucket router's conversions."""
-    import datetime
-
-    from pyspark.sql import types as T
-
-    if hasattr(v, "item"):
-        v = v.item()
-    if isinstance(v, datetime.datetime):
-        v = v.date()
-    if isinstance(dt, T.DateType) and isinstance(v, datetime.date):
-        return (v - datetime.date(1970, 1, 1)).days
-    return v
-
-
 def _lake_candidate_buckets(predicate, info: PaimonSchemaInfo) -> Optional[set]:
     """Buckets an equality/IN predicate pinning the FULL bucket key can
     live in, or None when pruning can't fire: not a fixed-bucket PK
@@ -650,13 +633,13 @@ def _lake_candidate_buckets(predicate, info: PaimonSchemaInfo) -> Optional[set]:
             return None
     from itertools import product
 
-    from paimon_python_spark.paimon_import import fixed_bucket
+    from paimon_python_spark.paimon_import import fixed_bucket, logical_value
 
     types = [info.spark_schema[k].dataType for k in bcols]
     try:
         return {
             fixed_bucket(
-                [_lake_bucket_key_logical(v, t) for v, t in zip(vals, types)],
+                [logical_value(v, t) for v, t in zip(vals, types)],
                 types,
                 nb,
             )
@@ -2955,20 +2938,16 @@ def _make_lake_bucket_fn(key_types, num_buckets: int):
                 _vectorized_fixed_buckets(cols, key_types, num_buckets)
             )
         except Exception:
-            from paimon_python_spark.paimon_import import fixed_bucket
+            from paimon_python_spark.paimon_import import fixed_bucket, logical_value
 
-            out = []
-            for vals in zip(*cols):
-                row = [
-                    None
-                    if (
-                        v is None
-                        or (not isinstance(v, (bytes, str)) and pd.isna(v))
-                    )
-                    else _lake_bucket_key_logical(v, t)
-                    for v, t in zip(vals, key_types)
-                ]
-                out.append(fixed_bucket(row, key_types, num_buckets))
+            out = [
+                fixed_bucket(
+                    [logical_value(v, t) for v, t in zip(vals, key_types)],
+                    key_types,
+                    num_buckets,
+                )
+                for vals in zip(*cols)
+            ]
             return pd.Series(out, dtype="int32")
 
     return fn
@@ -3147,6 +3126,304 @@ def _vectorized_fixed_buckets(cols, key_types, num_buckets: Optional[int] = None
     return out
 
 
+def _group_frame(tbl, session_tz=None):
+    """One write group's Arrow table as the pandas frame
+    ``_write_lake_group`` takes: NULL-bearing integer columns become
+    exact Python ints (a float64 column would corrupt values above
+    2^53), tz-aware timestamps naive ``session_tz``-local values."""
+    import pyarrow as pa
+
+    pdf = tbl.to_pandas(integer_object_nulls=True)
+    for fld in tbl.schema:
+        if pa.types.is_timestamp(fld.type) and fld.type.tz:
+            pdf[fld.name] = (
+                pdf[fld.name].dt.tz_convert(session_tz).dt.tz_localize(None)
+            )
+    return pdf
+
+
+def _lake_bucket_dir(table_path: str, info, pvals: dict, bucket: int) -> str:
+    """``<table>/<k>=<v>/.../bucket-<b>`` for logical partition values."""
+    import os
+
+    from paimon_python_spark.paimon_import import (
+        DEFAULT_PARTITION_NAME,
+        format_partition_segment,
+    )
+
+    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
+    rel = [
+        k + "=" + format_partition_segment(
+            pvals[k], info.spark_schema[k].dataType, default_name
+        )
+        for k in info.partition_keys
+    ]
+    return os.path.join(table_path, *rel, f"bucket-{bucket}")
+
+
+def _write_lake_group(
+    pdf,
+    info,
+    table_path: str,
+    fmt: str,
+    kv: bool,
+    bucket: int = 0,
+    seq_base: int = 0,
+    level: int = 0,
+    file_prefix: str = "data",
+    sort_cols: Optional[List[str]] = None,
+    changelog: bool = False,
+    sequence_field: Optional[str] = None,
+    dyn_old_files: Optional[dict] = None,
+) -> list:
+    """Write ONE (partition, bucket) group of a lake write — every lake
+    data file the builder (``_distributed_lake_write``) and the
+    ``format("paimon_lake")`` writer produce comes from here. ``pdf``
+    holds the group's rows in the table schema (see ``_group_frame``)
+    plus optional routing columns: ``__row_kind`` (0-3, else all +I),
+    ``__input_order`` (arrival order for same-key rows) and, on a
+    dynamic-bucket write, ``__h``/``__kn`` (key hashcode, new-key
+    flag).
+
+    ``kv=True`` writes key-value files: ``_KEY_*`` columns, rows sorted
+    by trimmed key, ``_SEQUENCE_NUMBER`` from ``seq_base`` (or the
+    ``sequence_field`` column) and ``_VALUE_KIND``; ``kv=False`` writes
+    plain value files, sorted by ``sort_cols`` when given. A group
+    larger than ``target-file-size`` rolls into consecutive chunks, one
+    file each, with value stats and the declared file indexes built
+    in-task; ``changelog`` copies each file as a ``changelog-*`` file.
+    With ``dyn_old_files`` ({(part_json, bucket): old HASH index
+    file}), the group's new key hashcodes extend its bucket's index
+    file. Returns one meta row (dict) per data file; the driver turns
+    each into a manifest entry with ``_lake_meta_entry``."""
+    import json
+    import os
+    import uuid
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from paimon_python_spark.paimon_import import (
+        _value_stats_for,
+        _write_fixture_data_file,
+        encode_binary_row,
+        logical_value,
+    )
+    from paimon_python_spark.types import spark_type_to_pa
+
+    part_keys = list(info.partition_keys)
+    trimmed = [k for k in info.primary_keys if k not in part_keys] if kv else []
+    trimmed_types = [info.spark_schema[k].dataType for k in trimmed]
+    pvals = {
+        k: logical_value(pdf[k].iloc[0], info.spark_schema[k].dataType)
+        for k in part_keys
+    }
+    part_json = json.dumps(pvals)
+    if trimmed:
+        if "__input_order" in pdf.columns:
+            # same-key events sequence in ARRIVAL order
+            ks = trimmed + ["__input_order"]
+        else:
+            # changelog-diff writers: one logical event per key; a
+            # full-compaction changelog carries (-U, +U) pairs and
+            # the -U (kind 1) must precede the +U (kind 2) in
+            # sequence order for streaming consumers
+            ks = trimmed + (["__row_kind"] if "__row_kind" in pdf.columns else [])
+        pdf = pdf.sort_values(ks, kind="mergesort")
+    elif sort_cols:
+        # intra-file clustering order (sort compaction): file-level
+        # min/max don't care, but parquet page stats do
+        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    pdf = pdf.reset_index(drop=True)
+    n = len(pdf)
+    arrays = {}
+    if kv:
+        for k, t in zip(trimmed, trimmed_types):
+            arrays[f"_KEY_{k}"] = pa.array(pdf[k], type=spark_type_to_pa(t))
+        if sequence_field is not None:
+            # Paimon's sequence.field: a USER column drives the
+            # sequence, so out-of-order CDC events merge by event
+            # time instead of arrival order (a stale update loses
+            # to the newer row already in the lake)
+            import datetime
+
+            sv = pdf[sequence_field]
+            if len(sv) and isinstance(sv.iloc[0], (datetime.datetime, pd.Timestamp)):
+                seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
+            else:
+                seqs = [int(x) for x in sv]
+        else:
+            seqs = list(range(seq_base, seq_base + n))
+        arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
+        arrays["_VALUE_KIND"] = pa.array(
+            [int(x) for x in pdf["__row_kind"]]
+            if "__row_kind" in pdf.columns
+            else [0] * n,
+            pa.int32(),
+        )
+    for f in info.spark_schema.fields:
+        arrays[f.name] = pa.array(pdf[f.name], type=spark_type_to_pa(f.dataType))
+    table = pa.table(arrays)
+    ddir = _lake_bucket_dir(table_path, info, pvals, bucket)
+    os.makedirs(ddir, exist_ok=True)
+    idx_file, idx_size, idx_rows = None, 0, 0
+    if dyn_old_files is not None and "__kn" in pdf.columns:
+        # dynamic-bucket index upkeep, fused into the write task:
+        # this group's NEW key hashcodes extend its bucket's index
+        # file (a hash already present stays — a collision with an
+        # existing key routes here by design, same as real Paimon)
+        import numpy as np
+
+        from paimon_python_spark.dynamic_bucket import (
+            read_hash_index_file,
+            write_hash_index_file,
+        )
+
+        newh = pdf.loc[pdf["__kn"] == 1, "__h"]
+        if len(newh):
+            new = np.unique(newh.to_numpy(dtype=np.int32))
+            old_name = dyn_old_files.get((part_json, bucket))
+            if old_name is not None:
+                old = read_hash_index_file(os.path.join(table_path, "index", old_name))
+                merged = np.concatenate([old, np.setdiff1d(new, old)])
+            else:
+                merged = new
+            idx_file = f"index-{uuid.uuid4().hex}-0"
+            os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
+            idx_size = write_hash_index_file(
+                os.path.join(table_path, "index", idx_file), merged
+            )
+            idx_rows = len(merged)
+
+    if n == 0:
+        return []
+    # target-file-size ROLLING (real Paimon's rolling writer): a
+    # group whose Arrow batch exceeds the target splits into
+    # consecutive row chunks, one data file each — a partition's
+    # compaction at scale must not fold into one multi-GB file.
+    # Chunks preserve the sort above, so per-file key ranges stay
+    # disjoint and per-file min/max stats stay tight.
+    target_bytes = _target_file_size(info)
+    n_files = 1
+    if n > 1 and target_bytes and table.nbytes > target_bytes:
+        n_files = min(n, -(-table.nbytes // target_bytes))
+    rows_per = -(-n // n_files)
+    index_opts = _bloom_option_cols(info)
+    out_rows = []
+    for ci in range(n_files):
+        lo = ci * rows_per
+        hi = min(n, lo + rows_per)
+        if lo >= hi:
+            continue
+        sub_tbl = table.slice(lo, hi - lo)
+        sub_pdf = pdf.iloc[lo:hi]
+        name = f"{file_prefix}-{uuid.uuid4()}-{ci}.{fmt}"
+        fpath = os.path.join(ddir, name)
+        _write_fixture_data_file(sub_tbl, fpath, fmt)
+        cl_name, cl_size = None, 0
+        if changelog:
+            # changelog-producer=input: the commit's input rows
+            # double as the changelog; a SEPARATE physical file
+            # (real Paimon's shape) so compaction can fold the data
+            # file while the changelog stays for streaming readers.
+            # Executor-local byte copy — same task, no extra pass.
+            import shutil
+
+            cl_name = f"changelog-{uuid.uuid4()}-{ci}.{fmt}"
+            shutil.copyfile(fpath, os.path.join(ddir, cl_name))
+            cl_size = os.path.getsize(os.path.join(ddir, cl_name))
+        if trimmed:
+            kmin, kmax = (
+                encode_binary_row(
+                    [
+                        logical_value(sub_pdf[k].iloc[i], t)
+                        for k, t in zip(trimmed, trimmed_types)
+                    ],
+                    trimmed_types,
+                )
+                for i in (0, -1)
+            )
+        else:
+            kmin = kmax = b""
+        stats = _value_stats_for(sub_tbl, info)
+        emb = _embedded_index_payload(sub_pdf, *index_opts)
+        emb, extra_idx = _split_standalone_index(emb, info, ddir, name)
+        sub_seqs = seqs[lo:hi] if kv else None
+        out_rows.append(
+            {
+                "file_name": name,
+                "part_json": part_json,
+                "bucket": bucket,
+                "rows": hi - lo,
+                "size": os.path.getsize(fpath),
+                "min_seq": min(sub_seqs) if kv else 0,
+                "max_seq": max(sub_seqs) if kv else hi - lo,
+                "min_key": kmin,
+                "max_key": kmax,
+                "stats_min": stats["_MIN_VALUES"],
+                "stats_max": stats["_MAX_VALUES"],
+                "null_counts": stats["_NULL_COUNTS"],
+                "cl_name": cl_name,
+                "cl_size": cl_size,
+                "emb_idx": emb,
+                "extra_idx": extra_idx,
+                # the group's rewritten HASH index rides the first
+                # chunk's row (one index file per group, not per file)
+                "idx_file": idx_file if ci == 0 else None,
+                "idx_size": idx_size if ci == 0 else 0,
+                "idx_rows": idx_rows if ci == 0 else 0,
+                "level": level,
+            }
+        )
+    return out_rows
+
+
+def _lake_meta_entry(r, info, num_buckets: int, changelog: bool = False) -> dict:
+    """Manifest ADD entry for one ``_write_lake_group`` meta row: its
+    data file, or with ``changelog=True`` its changelog copy."""
+    import json
+
+    from paimon_python_spark.paimon_import import _spec_file_meta, encode_binary_row
+
+    pj = json.loads(r["part_json"])
+    part_keys = list(info.partition_keys)
+    name, size = (r["cl_name"], r["cl_size"]) if changelog else (r["file_name"], r["size"])
+    return {
+        "_VERSION": 2,
+        "_KIND": 0,
+        "_PARTITION": encode_binary_row(
+            [pj[k] for k in part_keys],
+            [info.spark_schema[k].dataType for k in part_keys],
+        ),
+        "_BUCKET": int(r["bucket"]),
+        "_TOTAL_BUCKETS": num_buckets,
+        "_FILE": _spec_file_meta(
+            name,
+            int(size),
+            int(r["rows"]),
+            schema_id=info.id,
+            value_stats={
+                "_MIN_VALUES": bytes(r["stats_min"] or b""),
+                "_MAX_VALUES": bytes(r["stats_max"] or b""),
+                "_NULL_COUNTS": (
+                    list(r["null_counts"]) if r["null_counts"] is not None else None
+                ),
+            },
+            min_key=bytes(r["min_key"] or b""),
+            max_key=bytes(r["max_key"] or b""),
+            min_seq=int(r["min_seq"]),
+            max_seq=int(r["max_seq"]),
+            level=int(r["level"]),
+            embedded_index=bytes(r["emb_idx"]) if r["emb_idx"] is not None else None,
+            extra_files=(
+                [r["extra_idx"]]
+                if not changelog and r["extra_idx"] is not None
+                else None
+            ),
+        ),
+    }
+
+
 def _distributed_lake_write(
     table_path: str,
     info,
@@ -3174,42 +3451,16 @@ def _distributed_lake_write(
     columns, per-row ``_SEQUENCE_NUMBER`` from ``seq_base``, sorted by
     trimmed key — the level-0 LSM shape); ``kv=False`` groups by
     (partition, input task) and writes plain value files into
-    ``bucket-0`` (append tables have no bucket routing). Only KB-scale
-    per-file metadata returns to the driver. Returns (manifest ADD
-    entries, total rows)."""
+    ``bucket-0`` (append tables have no bucket routing). Each group is
+    written by ``_write_lake_group``; only its KB-scale meta rows
+    return to the driver. Returns (manifest ADD entries, total rows)."""
     import json as _json
 
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from paimon_python_spark.paimon_import import (
-        DEFAULT_PARTITION_NAME,
-        _spec_file_meta,
-        encode_binary_row,
-    )
-
     part_keys = list(info.partition_keys)
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
     trimmed = [k for k in info.primary_keys if k not in part_keys] if kv else []
-    trimmed_types = [info.spark_schema[k].dataType for k in trimmed]
-    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
-    value_fields = info.spark_schema
-    schema_id = info.id
-    # file-index.bloom-filter.columns: per-file bloom bitmaps for
-    # equality file skipping, built EXECUTOR-SIDE over each group's
-    # batch and carried in the manifest entry's _EMBEDDED_FILE_INDEX
-    # slot (engine payload format — see _decode_embedded_blooms)
-    (
-        bloom_cols,
-        bloom_spec,
-        bloom_dtypes,
-        bitmap_cols,
-        bitmap_kinds,
-        bsi_cols,
-        bsi_kinds,
-    ) = _bloom_option_cols(info)
-    target_bytes = _target_file_size(info)
 
     from paimon_python_spark._localdf import cast_select_sql, quote_ident
 
@@ -3358,251 +3609,35 @@ def _distributed_lake_write(
             T.StructField("idx_file", T.StringType()),
             T.StructField("idx_size", T.LongType()),
             T.StructField("idx_rows", T.LongType()),
+            # LSM level the file's manifest entry records
+            T.StructField("level", T.IntegerType()),
         ]
     )
-    schema_info = info
-
-    def _write_group(pdf: "pd.DataFrame") -> list:
-        import datetime
-        import os
-        import uuid
-
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        from paimon_python_spark.paimon_import import (
-            _value_stats_for,
-            _write_fixture_data_file,
-            encode_binary_row,
-            format_partition_segment,
-        )
-        from paimon_python_spark.types import spark_type_to_pa
-
-        epoch = datetime.date(1970, 1, 1)
-
-        def logical(v, dt):
-            if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
-                return None
-            if hasattr(v, "item"):
-                v = v.item()
-            if isinstance(dt, T.DateType):
-                if isinstance(v, datetime.datetime):
-                    v = v.date()
-                if isinstance(v, datetime.date):
-                    return (v - epoch).days
-            return v
-
-        bucket = int(pdf["__bucket"].iloc[0]) if kv else 0
-        pvals = {
-            k: logical(pdf[k].iloc[0], dt) for k, dt in zip(part_keys, part_types)
-        }
-        if trimmed:
-            if "__input_order" in pdf.columns:
-                # same-key events sequence in ARRIVAL order (see the
-                # __input_order comment above)
-                ks = trimmed + ["__input_order"]
-            else:
-                # changelog-diff writers: one logical event per key; a
-                # full-compaction changelog carries (-U, +U) pairs and
-                # the -U (kind 1) must precede the +U (kind 2) in
-                # sequence order for streaming consumers
-                ks = trimmed + (
-                    ["__row_kind"] if "__row_kind" in pdf.columns else []
-                )
-            pdf = pdf.sort_values(ks, kind="mergesort")
-        elif sort_cols:
-            # intra-file clustering order (sort compaction): file-level
-            # min/max don't care, but parquet page stats do
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        pdf = pdf.reset_index(drop=True)
-        n = len(pdf)
-        arrays = {}
-        if kv:
-            for k, t in zip(trimmed, trimmed_types):
-                arrays[f"_KEY_{k}"] = pa.array(pdf[k], type=spark_type_to_pa(t))
-            if sequence_field is not None:
-                # Paimon's sequence.field: a USER column drives the
-                # sequence, so out-of-order CDC events merge by event
-                # time instead of arrival order (a stale update loses
-                # to the newer row already in the lake)
-                import datetime as _sdt
-
-                sv = pdf[sequence_field]
-                if len(sv) and isinstance(
-                    sv.iloc[0], (_sdt.datetime, pd.Timestamp)
-                ):
-                    seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
-                else:
-                    seqs = [int(x) for x in sv]
-                arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-            else:
-                seqs = list(range(seq_base, seq_base + n))
-                arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-            arrays["_VALUE_KIND"] = pa.array(
-                [int(x) for x in pdf["__row_kind"]]
-                if "__row_kind" in pdf.columns
-                else [0] * n,
-                pa.int32(),
-            )
-        for f in value_fields.fields:
-            arrays[f.name] = pa.array(pdf[f.name], type=spark_type_to_pa(f.dataType))
-        table = pa.table(arrays)
-        rel = [
-            f"{k}={format_partition_segment(pvals[k], dt, default_name)}"
-            for k, dt in zip(part_keys, part_types)
-        ]
-        ddir = os.path.join(table_path, *rel, f"bucket-{bucket}")
-        os.makedirs(ddir, exist_ok=True)
-        idx_file, idx_size, idx_rows = None, 0, 0
-        if dyn_old_files is not None and "__kn" in pdf.columns:
-            # dynamic-bucket index upkeep, fused into the write task:
-            # this group's NEW key hashcodes extend its bucket's index
-            # file (a hash already present stays — a collision with an
-            # existing key routes here by design, same as real Paimon)
-            import numpy as np
-
-            from paimon_python_spark.dynamic_bucket import (
-                read_hash_index_file,
-                write_hash_index_file,
-            )
-
-            newh = pdf.loc[pdf["__kn"] == 1, "__h"]
-            if len(newh):
-                new = np.unique(newh.to_numpy(dtype=np.int32))
-                old_name = dyn_old_files.get((_json.dumps(pvals), bucket))
-                if old_name is not None:
-                    old = read_hash_index_file(
-                        os.path.join(table_path, "index", old_name)
-                    )
-                    merged = np.concatenate([old, np.setdiff1d(new, old)])
-                else:
-                    merged = new
-                idx_file = f"index-{uuid.uuid4().hex}-0"
-                os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
-                idx_size = write_hash_index_file(
-                    os.path.join(table_path, "index", idx_file), merged
-                )
-                idx_rows = len(merged)
-
-        if n == 0:
-            return []
-        # target-file-size ROLLING (real Paimon's rolling writer): a
-        # group whose Arrow batch exceeds the target splits into
-        # consecutive row chunks, one data file each — a partition's
-        # compaction at scale must not fold into one multi-GB file.
-        # Chunks preserve the sort above, so per-file key ranges stay
-        # disjoint and per-file min/max stats stay tight.
-        n_files = 1
-        if n > 1 and target_bytes and table.nbytes > target_bytes:
-            n_files = min(n, -(-table.nbytes // target_bytes))
-        rows_per = -(-n // n_files)
-        out_rows = []
-        for ci in range(n_files):
-            lo = ci * rows_per
-            hi = min(n, lo + rows_per)
-            if lo >= hi:
-                continue
-            sub_tbl = table.slice(lo, hi - lo)
-            sub_pdf = pdf.iloc[lo:hi]
-            name = f"{file_prefix}-{uuid.uuid4()}-{ci}.{fmt}"
-            fpath = os.path.join(ddir, name)
-            _write_fixture_data_file(sub_tbl, fpath, fmt)
-            cl_name, cl_size = None, 0
-            if changelog:
-                # changelog-producer=input: the commit's input rows
-                # double as the changelog; a SEPARATE physical file
-                # (real Paimon's shape) so compaction can fold the data
-                # file while the changelog stays for streaming readers.
-                # Executor-local byte copy — same task, no extra pass.
-                import shutil as _shutil
-
-                cl_name = f"changelog-{uuid.uuid4()}-{ci}.{fmt}"
-                _shutil.copyfile(fpath, os.path.join(ddir, cl_name))
-                cl_size = os.path.getsize(os.path.join(ddir, cl_name))
-            if trimmed:
-                kmin = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[0], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-                kmax = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[-1], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-            else:
-                kmin = kmax = b""
-            stats = _value_stats_for(sub_tbl, schema_info)
-            emb = _embedded_index_payload(
-                sub_pdf,
-                bloom_cols,
-                bloom_spec,
-                bloom_dtypes,
-                bitmap_cols,
-                bitmap_kinds,
-                bsi_cols,
-                bsi_kinds,
-            )
-            emb, extra_idx = _split_standalone_index(
-                emb, schema_info, ddir, name
-            )
-            sub_seqs = seqs[lo:hi] if kv else None
-            out_rows.append(
-                {
-                    "file_name": name,
-                    "part_json": _json.dumps(pvals),
-                    "bucket": bucket,
-                    "rows": hi - lo,
-                    "size": os.path.getsize(fpath),
-                    "min_seq": (
-                        (min(sub_seqs) if sub_seqs else seq_base) if kv else 0
-                    ),
-                    "max_seq": (
-                        (max(sub_seqs) if sub_seqs else seq_base)
-                        if kv
-                        else hi - lo
-                    ),
-                    "min_key": kmin,
-                    "max_key": kmax,
-                    "stats_min": stats["_MIN_VALUES"],
-                    "stats_max": stats["_MAX_VALUES"],
-                    "null_counts": stats["_NULL_COUNTS"],
-                    "cl_name": cl_name,
-                    "cl_size": cl_size,
-                    "emb_idx": emb,
-                    "extra_idx": extra_idx,
-                    # the group's rewritten HASH index rides the first
-                    # chunk's row (one index file per group, not per file)
-                    "idx_file": idx_file if ci == 0 else None,
-                    "idx_size": idx_size if ci == 0 else 0,
-                    "idx_rows": idx_rows if ci == 0 else 0,
-                }
-            )
-        return out_rows
-
     from paimon_python_spark.types import spark_schema_to_pa
 
     meta_pa = spark_schema_to_pa(meta_schema)
     session_tz = sdf.sparkSession.conf.get("spark.sql.session.timeZone")
 
     def _write_arrow_group(tbl):
-        """Arrow → pandas in-task, with NULL-bearing integer columns as
-        exact Python ints (applyInPandas would hand them over as
-        float64 and corrupt values above 2^53); timestamps become
-        naive session-local values, as applyInPandas delivers them."""
         import pyarrow as pa
 
-        pdf = tbl.to_pandas(integer_object_nulls=True)
-        for fld in tbl.schema:
-            if pa.types.is_timestamp(fld.type) and fld.type.tz:
-                pdf[fld.name] = (
-                    pdf[fld.name].dt.tz_convert(session_tz).dt.tz_localize(None)
-                )
-        return pa.Table.from_pylist(_write_group(pdf), schema=meta_pa)
+        pdf = _group_frame(tbl, session_tz)
+        metas = _write_lake_group(
+            pdf,
+            info,
+            table_path,
+            fmt,
+            kv,
+            bucket=int(pdf["__bucket"].iloc[0]) if kv else 0,
+            seq_base=seq_base,
+            level=level,
+            file_prefix=file_prefix,
+            sort_cols=sort_cols,
+            changelog=changelog,
+            sequence_field=sequence_field,
+            dyn_old_files=dyn_old_files,
+        )
+        return pa.Table.from_pylist(metas, schema=meta_pa)
 
     # pin the group-write's width: the routed rows shuffle only KBs at
     # gate scale, so AQE's byte-coalescing would fold every (partition,
@@ -3640,53 +3675,11 @@ def _distributed_lake_write(
                     }
                 )
 
-    def _entry(r, file_name, file_size, with_extra=False):
-        pj = _json.loads(r["part_json"])
-        return {
-            "_VERSION": 2,
-            "_KIND": 0,
-            "_PARTITION": encode_binary_row(
-                [pj[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": int(r["bucket"]),
-            "_TOTAL_BUCKETS": num_buckets,
-            "_FILE": _spec_file_meta(
-                file_name,
-                int(file_size),
-                int(r["rows"]),
-                schema_id=schema_id,
-                value_stats={
-                    "_MIN_VALUES": bytes(r["stats_min"] or b""),
-                    "_MAX_VALUES": bytes(r["stats_max"] or b""),
-                    "_NULL_COUNTS": (
-                        list(r["null_counts"])
-                        if r["null_counts"] is not None
-                        else None
-                    ),
-                },
-                min_key=bytes(r["min_key"] or b""),
-                max_key=bytes(r["max_key"] or b""),
-                min_seq=int(r["min_seq"]),
-                max_seq=int(r["max_seq"]),
-                level=level,
-                embedded_index=(
-                    bytes(r["emb_idx"]) if r["emb_idx"] is not None else None
-                ),
-                extra_files=(
-                    [r["extra_idx"]]
-                    if with_extra and r["extra_idx"] is not None
-                    else None
-                ),
-            ),
-        }
-
-    man_entries = [
-        _entry(r, r["file_name"], r["size"], with_extra=True) for r in meta
-    ]
+    man_entries = [_lake_meta_entry(r, info, num_buckets) for r in meta]
     n_rows = sum(int(r["rows"]) for r in meta)
     if changelog:
         cl_entries = [
-            _entry(r, r["cl_name"], r["cl_size"])
+            _lake_meta_entry(r, info, num_buckets, changelog=True)
             for r in meta
             if r["cl_name"] is not None
         ]
@@ -4174,7 +4167,11 @@ def create_lake_table(
 
     from pyspark.sql import types as T
 
-    from paimon_python_spark.paimon_import import paimon_type_string
+    from paimon_python_spark.paimon_import import (
+        BINARY_ROW_TYPES,
+        paimon_type_string,
+        parse_paimon_type,
+    )
 
     if os.path.exists(os.path.join(table_path, "schema")):
         raise ValueError(f"create_lake_table: {table_path!r} already exists")
@@ -4192,6 +4189,20 @@ def create_lake_table(
     for k in pks + parts:
         if k not in names:
             raise ValueError(f"create_lake_table: key column {k!r} not in schema")
+    # key, bucket-key and partition values are stored as BinaryRows:
+    # refuse a type the codec cannot encode now, not at every write
+    bucket_keys = [
+        c.strip() for c in (options or {}).get("bucket-key", "").split(",") if c.strip()
+    ]
+    for n, t in fields:
+        if n in pks + parts + bucket_keys:
+            dt = parse_paimon_type(t)[0]
+            if not isinstance(dt, BINARY_ROW_TYPES):
+                raise ValueError(
+                    f"create_lake_table: key column {n!r} has type "
+                    f"{dt.simpleString()}, which a lake key, bucket key or "
+                    "partition column cannot have"
+                )
     if options:
         from paimon_python_spark.tags import validate_auto_tag_options
 

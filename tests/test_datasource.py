@@ -2305,6 +2305,100 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path):
         assert len(pk_out) == 10 and pk_out[3] == "UP3"
 
 
+@pytest.mark.parametrize(
+    "pk, options",
+    [
+        pytest.param(True, {"bucket": "3"}, id="fixed-bucket-pk"),
+        pytest.param(
+            False, {"file-index.bloom-filter.columns": "s"}, id="append-bloom"
+        ),
+        pytest.param(False, {"file.format": "avro"}, id="avro"),
+    ],
+)
+def test_lake_front_door_writes_like_the_builder(spark, tmp_path, pk, options):
+    """One lake writer: the same one-task input written through
+    ``format("paimon_lake")`` and through the builder stores, in every
+    (partition, bucket), the same rows (system columns included) and
+    the same manifest file metadata — file names and sizes aside."""
+    import glob
+    import os
+
+    from paimon_python_spark.agg_merge import read_group_file
+    from paimon_python_spark.avro_codec import read_avro_records
+    from paimon_python_spark.lake_datasource import register_lake
+    from paimon_python_spark.paimon_import import (
+        read_manifest_list,
+        read_paimon_snapshot,
+    )
+    from paimon_python_spark.paimon_lake import (
+        create_lake_table,
+        write_lake_append,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    register_lake(spark)
+    fmt = options.get("file.format", "parquet")
+    # repeated keys per partition (arrival order decides their
+    # sequence), NULLs and BIGINTs past 2^53
+    rows = [
+        ("a" if i % 3 else "b", i % 7, None if i % 5 == 0 else 2**53 + i, f"s{i % 4}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "dt string, k bigint, v bigint, s string")
+    df = df.coalesce(1)
+
+    def lake(name):
+        d = str(tmp_path / name)
+        create_lake_table(
+            d,
+            [
+                ("dt", "STRING NOT NULL"),
+                ("k", "BIGINT NOT NULL"),
+                ("v", "BIGINT"),
+                ("s", "STRING"),
+            ],
+            partition_keys=["dt"],
+            primary_keys=["dt", "k"] if pk else None,
+            options=options,
+        )
+        return d
+
+    def written(d):
+        snap = read_paimon_snapshot(d)
+        out: dict = {}
+        for ml in (snap["baseManifestList"], snap["deltaManifestList"]):
+            for name in read_manifest_list(d, ml):
+                with open(os.path.join(d, "manifest", name), "rb") as f:
+                    recs = read_avro_records(f.read())[1]
+                for r in recs:
+                    meta = dict(r["_FILE"])
+                    (path,) = glob.glob(
+                        os.path.join(d, "**", meta.pop("_FILE_NAME")), recursive=True
+                    )
+                    for k in ("_FILE_SIZE", "_EXTRA_FILES", "_CREATION_TIME"):
+                        meta.pop(k)
+                    stored = read_group_file(
+                        path,
+                        fmt,
+                        ["_KEY_k", "_SEQUENCE_NUMBER", "_VALUE_KIND", "dt", "k", "v", "s"],
+                    ).to_pylist()
+                    group = (bytes(r["_PARTITION"]), r["_BUCKET"], r["_TOTAL_BUCKETS"])
+                    out.setdefault(group, []).append((meta, stored))
+        return {g: sorted(files, key=repr) for g, files in out.items()}
+
+    front, builder = lake("front"), lake("builder")
+    df.write.format("paimon_lake").option("path", front).mode("append").save()
+    (write_lake_pk_append if pk else write_lake_append)(builder, df)
+    got, want = written(front), written(builder)
+    assert len(want) >= 2
+    assert got == want
+    stored = [f[1] for files in want.values() for f in files]
+    assert sorted(r["k"] for rs in stored for r in rs) == sorted(r[1] for r in rows)
+    assert {2**53 + 1} <= {r["v"] for rs in stored for r in rs}
+
+
 def test_stream_latest_full_pk_bootstrap(spark, tmp_path):
     """r12: scan.mode=latest-full on a PK lake through readStream — the
     first batch is the MERGED full state (bucket-group partitions

@@ -5037,16 +5037,27 @@ def test_lake_ignore_delete_all_merge_paths(tmp_path, spark):
     assert sorted(ds.k.tolist()) == [1, 2]
 
 
-@pytest.mark.parametrize("pk", [True, False])
-def test_lake_write_keeps_bigint_exact(tmp_path, spark, pk):
+@pytest.mark.parametrize(
+    "pk, front",
+    [
+        pytest.param(True, False, id="True"),
+        pytest.param(False, False, id="False"),
+        pytest.param(True, True, id="front-pk"),
+        pytest.param(False, True, id="front-append"),
+    ],
+)
+def test_lake_write_keeps_bigint_exact(tmp_path, spark, pk, front):
     """A NULL in a BIGINT column of a written group must not push the
     group through float64: 2^53 + 1 lands exactly in the data file and
     reads back exactly, for a PK write and for an append write whose
-    input is one task (one group holding both rows). The append lake
-    declares a bloom column, which routes its writes through the
-    executor-side group writer that PK writes and compactions use."""
+    input is one task (one group holding both rows), through the
+    builder and through ``format("paimon_lake")``. The append lake
+    declares a bloom column, which routes its builder writes through
+    the executor-side group writer that PK writes and compactions
+    use."""
     import glob
 
+    from paimon_python_spark.lake_datasource import register_lake
     from paimon_python_spark.paimon_lake import (
         PaimonLakeTable,
         create_lake_table,
@@ -5056,6 +5067,7 @@ def test_lake_write_keeps_bigint_exact(tmp_path, spark, pk):
     from paimon_python_spark.session import set_spark
 
     set_spark(spark)
+    register_lake(spark)
     big = 2**53 + 1
     p = str(tmp_path / "bigint_lake")
     create_lake_table(
@@ -5067,9 +5079,35 @@ def test_lake_write_keeps_bigint_exact(tmp_path, spark, pk):
         ),
     )
     df = spark.createDataFrame([(1, big), (2, None)], "k bigint, v bigint")
-    (write_lake_pk_append if pk else write_lake_append)(p, df.coalesce(1))
+    if front:
+        df.coalesce(1).write.format("paimon_lake").option("path", p).mode(
+            "append"
+        ).save()
+    else:
+        (write_lake_pk_append if pk else write_lake_append)(p, df.coalesce(1))
     (data_file,) = glob.glob(os.path.join(p, "bucket-0", "data-*.parquet"))
     stored = pq.read_table(data_file, columns=["k", "v"]).to_pylist()
     assert sorted((r["k"], r["v"]) for r in stored) == [(1, big), (2, None)]
     got = PaimonLakeTable(p).new_read_builder().new_read().to_df().collect()
     assert sorted((r["k"], r["v"]) for r in got) == [(1, big), (2, None)]
+
+
+@pytest.mark.parametrize("role", ["primary-key", "bucket-key", "partition"])
+@pytest.mark.parametrize("key_type", ["DECIMAL(10, 2)", "TIMESTAMP(6)"])
+def test_create_lake_table_refuses_unencodable_key_types(tmp_path, key_type, role):
+    """Key, bucket-key and partition values are stored as BinaryRows,
+    which have no DECIMAL or TIMESTAMP encoding: the lake is refused
+    when it is created, naming the column, instead of failing every
+    later write inside a Python worker."""
+    from paimon_python_spark.paimon_lake import create_lake_table
+
+    p = str(tmp_path / "bad_key_lake")
+    with pytest.raises(ValueError, match="key column 'x'"):
+        create_lake_table(
+            p,
+            [("id", "INT NOT NULL"), ("x", f"{key_type} NOT NULL"), ("v", "STRING")],
+            primary_keys={"primary-key": ["x"], "bucket-key": ["id"]}.get(role),
+            partition_keys=["x"] if role == "partition" else None,
+            options={"bucket": "2", "bucket-key": "x"} if role == "bucket-key" else None,
+        )
+    assert not os.path.exists(os.path.join(p, "schema"))
